@@ -171,20 +171,20 @@ def loop_ckpt_lazy(df: DataFrame) -> DataFrame:
     (the following round's first aggregate, or the driver's final
     collect) instead of paying a dedicated per-round job. Use for loop
     bodies whose round boundary needs no cardinality read — the
-    checkpoint-class bench fix (round-12 VERDICT #2): q_spectral's four
-    rounds each paid an eager-checkpoint job that pure-plan execution
-    folds away. Same AUDIT_ITERATION_MODE pass-through as loop_ckpt.
+    checkpoint-class bench fix (round-12 VERDICT #2): a four-round
+    eigen-solve paid an eager-checkpoint job per round that pure-plan
+    execution folds away. Same AUDIT_ITERATION_MODE pass-through as
+    loop_ckpt.
 
     NOT for loop states consumed by MULTIPLE parallel stages per round
     (round-13 measurement): until the first compute fills the cache,
     independent consumer stages (or broadcast builds) each re-execute
     the stub's chain, and with per-round nesting the duplication
-    compounds across rounds — dominant_edge_matching measured 2.7 s ->
-    9.5 s and scc_first_peel 3.1 s -> 5.1 s lazy. Those loops keep
-    EAGER loop_ckpt. Safe uses: one consumer stage per round (pagerank,
-    lpa, katz), or a per-round driver ACTION that materializes the stub
-    before the next round reads it (label propagation's changed count,
-    the greedy argmax collects)."""
+    compounds across rounds — two graph loops measured 2.7 s -> 9.5 s
+    and 3.1 s -> 5.1 s lazy. Such loops keep EAGER loop_ckpt. Safe
+    uses: one consumer stage per round (pagerank), or a per-round
+    ACTION that materializes the stub before the next round reads it
+    (label propagation's changed count, the greedy argmax collects)."""
     return df if AUDIT_ITERATION_MODE else df.localCheckpoint(eager=False)
 
 

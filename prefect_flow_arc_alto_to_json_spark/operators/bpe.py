@@ -121,8 +121,8 @@ def _bpe_train_loop(
     spark, vocab0: DataFrame, k: int
 ) -> tuple[DataFrame, DataFrame]:
     vocab = vocab0.localCheckpoint()
-    # Size-adaptive loop parallelism (round-14; the dedup_components /
-    # q_stable_matching precedent): the corpus pass above keeps full
+    # Size-adaptive loop parallelism (round-14; the dedup_components
+    # precedent): the corpus pass above keeps full
     # parallelism, but every loop relation is VOCABULARY-sized, so on
     # small vocabularies the k merge steps cost mostly task scheduling
     # (32 shuffle partitions x pair-count agg x steps for a few thousand
@@ -241,9 +241,10 @@ def unigram_viterbi(
     rational — boundary hits measure-zero, the Adamic-Adar discipline);
     the DP then runs in INTEGER cost space, so both engines walk the
     same lattice. Viterbi ties break on (cost, start-of-last-piece):
-    equal-cost candidates prefer the LONGEST final piece; the
-    (word, pos) level relation makes the tie-break a ROW_NUMBER, never a
-    struct-min.
+    equal-cost candidates prefer the LONGEST final piece. The tie-break
+    is a struct-min — array_min over (cost, j, ...) candidate structs,
+    where (cost, j) already identifies a candidate (see the
+    lattice-at-once note below).
 
     The DP is unrolled as ``max_word_len`` bounded levels (the corpus
     max is 8 chars; raise the constant for longer-tailed corpora — words
@@ -310,7 +311,7 @@ def unigram_viterbi(
         .select("word", "e.j", "e.i", "e.piece")
         .join(F.broadcast(scored), "piece")
     )
-    # LATTICE-AT-ONCE DP (round-14, guide §7.3/§2.4 — the q_dtw device):
+    # LATTICE-AT-ONCE DP (round-14, guide §7.3/§2.4):
     # the previous form ran max_word_len per-level rounds, each a
     # segs⋈ball join + per-word window + eager localCheckpoint — ~40
     # driver jobs and max_word_len vocabulary shuffles for an 8-char DP.

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scale import loop_ckpt, loop_ckpt_lazy, loop_rounds
+from ..functions.scale import loop_ckpt_lazy, loop_rounds
 
 NANO = 1_000_000_000
 
@@ -51,7 +51,7 @@ def pagerank(
     # materialize the edge/out-weight relation and the node set ONCE:
     # they feed every iteration's eager localCheckpoint job, and without
     # truncation each iteration re-executes the caller's whole edge
-    # derivation (a 4-table fact join in q_pagerank_trade) several times
+    # derivation (a fact join or a corpus tokenisation) several times
     e = (
         edges.join(out_w, "src")
         .select("src", "dst", "w", "out_w")
@@ -100,1423 +100,3 @@ def pagerank(
             .transform(loop_ckpt_lazy)
         )
     return ranks
-
-
-def triangle_counts(edges: DataFrame) -> DataFrame:
-    """Per-node triangle participation counts over the undirected graph of
-    ``edges`` (src, dst) — the third classic graph primitive next to
-    connected components (dedup.py) and PageRank: triangle density feeds
-    clustering-coefficient quality signals and spam/bot detection on
-    link corpora.
-
-    Shape: canonicalize each edge to (a < b), dedupe, then count ordered
-    wedges closed by a third edge — two self-equi-joins on node keys, the
-    standard distributed triangle enumeration. Each triangle (a<b<c) is
-    found exactly once and attributed to all three corners via an explode
-    + groupBy. At 100 TB scale the canonical edge relation would persist
-    bucketed by its join keys, and edge ORIENTATION BY DEGREE (point each
-    edge at the higher-degree endpoint) replaces id order to bound the
-    wedge fan-out of hub nodes — same plan, skew-hardened ordering; id
-    order keeps the relation (and the SQL replay) simpler here.
-
-    Returns (node, n_tri) for nodes in ≥1 triangle.
-    """
-    # materialize once: three join branches descend from this relation,
-    # and without truncation each re-executes the caller's whole edge
-    # derivation (a 4-table fact join in q_triangle_counts) — the same
-    # reason pagerank checkpoints its edge relation
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = und.select(F.col("a").alias("y2"), F.col("b").alias("z"))
-    e3 = und.select(F.col("a").alias("x3"), F.col("b").alias("z3"))
-    # the checkpointed relation carries no stats, so Catalyst would
-    # sort-merge these self-joins; the canonical edge list here is
-    # dim-graph-sized (nations), so broadcast the closing sides. On a
-    # billion-edge graph the hints drop and this becomes the bucketed
-    # sort-merge wedge join (the pipeline_embedding_dedup defense).
-    tri = (
-        e1.join(F.broadcast(e2), F.col("y") == F.col("y2"))
-        .join(
-            F.broadcast(e3),
-            (F.col("x3") == F.col("x")) & (F.col("z3") == F.col("z")),
-        )
-        .select("x", "y", "z")
-    )
-    corners = tri.select(
-        F.explode(F.array("x", "y", "z")).alias("node")
-    )
-    return corners.groupBy("node").agg(F.count(F.lit(1)).alias("n_tri"))
-
-
-def lpa_communities(edges: DataFrame, iterations: int = 3) -> DataFrame:
-    """Weighted synchronous label propagation (Raghavan et al.): every
-    node starts in its own community; each round it adopts the label
-    with the LARGEST total edge weight among its neighbors (ties ->
-    smallest label, the total order that makes synchronous LPA — which
-    is otherwise notoriously tie-unstable — fully deterministic and
-    therefore SQL-replayable by unrolling).
-
-    Input ``edges``: (src, dst, w) directed; symmetrized here, self-loops
-    dropped (a self-loop is a constant self-vote that only dampens
-    propagation).
-
-    Scale: per iteration ONE labels⋈edges join keyed on the neighbor
-    endpoint + one max_by groupBy on the node — the dedup_components
-    shape with weighted votes; localCheckpoint truncates lineage each
-    round so iteration count multiplies wall-clock, not plan depth.
-    Returns (node, community).
-    """
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select("src", "dst", "w")
-        .unionByName(
-            edges.where(F.col("src") != F.col("dst")).select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-            )
-        )
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .localCheckpoint()
-    )
-    labels = (
-        und.select(F.col("src").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("community"))
-        .localCheckpoint()
-    )
-    for _ in range(loop_rounds(iterations)):
-        votes = (
-            und.join(
-                labels.select(
-                    F.col("node").alias("dst"),
-                    F.col("community").alias("nbr_label"),
-                ),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("node"), F.col("nbr_label"))
-            .agg(F.sum("w").alias("vw"))
-        )
-        labels = (
-            votes.groupBy("node")
-            .agg(
-                F.max_by(
-                    "nbr_label", F.struct(F.col("vw"), -F.col("nbr_label"))
-                ).alias("community")
-            )
-            .transform(loop_ckpt_lazy)
-        )
-    return labels
-
-
-def hits_scores(edges: DataFrame, iterations: int = 2) -> DataFrame:
-    """Kleinberg's HITS on the directed weighted graph: authority(i) =
-    sum of hub scores over in-edges, hub(i) = sum of authority scores
-    over out-edges, each half-iteration renormalized to max = 1e6 in
-    HALF-UP INTEGER micro-units — so every score is an exact long and
-    the fixed iteration count unrolls into a value-exact SQL replay
-    (the pagerank determinism contract applied to the two-score
-    recurrence). Ties in the max are value-ties (same long), harmless.
-
-    Scale: each half-iteration is one scores⋈edges join keyed on the
-    contributing endpoint + a map-side-combined groupBy + a 1-row max
-    broadcast back; localCheckpoint truncates lineage per round.
-    Returns (node, hub_micro, auth_micro)."""
-    from ..functions.scalar import half_up_units
-
-    und = edges.select("src", "dst", "w").localCheckpoint()
-    nodes = (
-        und.select(F.col("src").alias("node"))
-        .unionByName(und.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    hubs = nodes.select("node", F.lit(1_000_000).cast("long").alias("h"))
-    auths = nodes.select("node", F.lit(1_000_000).cast("long").alias("a"))
-
-    def _normalize(df: DataFrame, col: str) -> DataFrame:
-        mx = df.agg(F.max(col).alias("mx"))
-        return (
-            df.crossJoin(F.broadcast(mx))
-            .select(
-                "node",
-                half_up_units(F.col(col), F.col("mx"), 1_000_000).alias(col),
-            )
-            .transform(loop_ckpt)
-        )
-
-    for _ in range(loop_rounds(iterations)):
-        raw_a = (
-            und.join(
-                hubs.select(F.col("node").alias("src"), "h"), "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("w") * F.col("h")).alias("a"))
-        )
-        auths = _normalize(
-            nodes.join(raw_a, "node", "left").select(
-                "node", F.coalesce("a", F.lit(0)).alias("a")
-            ),
-            "a",
-        )
-        raw_h = (
-            und.join(
-                auths.select(F.col("node").alias("dst"), "a"), "dst"
-            )
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum(F.col("w") * F.col("a")).alias("h"))
-        )
-        hubs = _normalize(
-            nodes.join(raw_h, "node", "left").select(
-                "node", F.coalesce("h", F.lit(0)).alias("h")
-            ),
-            "h",
-        )
-    # the checkpointed score relations carry no stats, so Catalyst would
-    # sort-merge the final assembly; all three sides are node-keyed and
-    # node-sized, so shuffle-hash co-partitions them without the sorts
-    # (and at dim-graph scale AQE may still upgrade to broadcast)
-    return (
-        nodes.join(hubs.hint("shuffle_hash"), "node")
-        .join(auths.hint("shuffle_hash"), "node")
-        .select(
-            "node",
-            F.col("h").alias("hub_micro"),
-            F.col("a").alias("auth_micro"),
-        )
-    )
-
-
-def bellman_ford(
-    edges: DataFrame, source: int, rounds: int = 3
-) -> DataFrame:
-    """Single-source shortest paths by ``rounds`` synchronous
-    Bellman-Ford relaxations — the MIN-PLUS member of the iterative
-    graph family (pagerank: sum/scale, lpa: argmax votes, reachability:
-    boolean closure). ``edges`` carries (src, dst, cost) with INTEGER
-    costs, so every relaxation is exact long arithmetic — no snapping
-    needed, the oracle unrolls the rounds verbatim.
-
-    Output: (node, dist) for nodes reachable within ``rounds`` hops;
-    unreached nodes are absent (standard sparse-frontier semantics).
-
-    Scale: per round ONE dist⋈edges join on src + ONE groupBy(dst) MIN —
-    both map-side-combinable; localCheckpoint truncates lineage so the
-    per-round plan is constant. k rounds bound path length by k hops —
-    the bounded-depth contract shared with q_recursive_reachability.
-    """
-    e = edges.select("src", "dst", "cost").localCheckpoint()
-    dist = (
-        e.sparkSession.range(1)
-        .select(F.lit(source).cast("long").alias("node"))
-        .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint()
-    )
-    for _ in range(loop_rounds(rounds)):
-        relaxed = (
-            dist.join(e, dist["node"] == e["src"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("dist") + F.col("cost")).alias("d"),
-            )
-            .unionByName(dist.select("node", F.col("dist").alias("d")))
-        )
-        dist = (
-            relaxed.groupBy("node")
-            .agg(F.min("d").alias("dist"))
-            # lazy with two per-round readers (the relaxation join and the
-            # union's identity branch): both sit in ONE stage tree whose
-            # map side computes the stub once and caches before the
-            # groupBy(node) exchange; dist is frontier-sized (<= nodes),
-            # so even a cold double-execution is bounded. Measured: driver
-            # r12->r13 1.16->1.25 (noise band), r14 baseline 0.93 s. If a
-            # regression shows up here, revert to eager loop_ckpt.
-            .transform(loop_ckpt_lazy)
-        )
-    return dist
-
-
-def kcore_peel(edges: DataFrame, k: int, rounds: int = 3) -> DataFrame:
-    """Bounded-round k-core peeling: repeatedly drop nodes of degree
-    < k and restrict the edge set, ``rounds`` times — the degeneracy
-    peel behind community cores and spam-cluster mining. ``edges`` must
-    be the UNDIRECTED distinct pair relation (both orientations
-    present). Full k-core iterates to fixpoint; the fixed-round form is
-    the oracle-unrollable prefix (same contract as the bounded
-    reachability/Bellman-Ford rounds), and each round is ONE degree
-    aggregate + two semi-join restrictions — all map-side-combinable.
-
-    Output: (node, deg) for nodes surviving round ``rounds``, with
-    their degree in the restricted graph (a row with deg < k signals
-    the peel has not yet converged — visible, not hidden).
-    """
-    e = edges.select("a", "b").localCheckpoint()
-    for _ in range(loop_rounds(rounds)):
-        keep = (
-            e.groupBy(F.col("a").alias("node"))
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= k)
-            .select("node")
-        )
-        e = (
-            e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
-            .select("a", "b")
-            .transform(loop_ckpt)
-        )
-    return e.groupBy(F.col("a").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-
-
-def clustering_coefficient(edges: DataFrame) -> DataFrame:
-    """Per-node local clustering coefficient over the undirected graph of
-    ``edges`` (src, dst): cc(u) = 2·tri(u) / (deg(u)·(deg(u)−1)) — the
-    transitivity signal behind community cohesion scoring and bot/spam
-    farm detection (link farms have high degree but near-zero closure).
-
-    Emitted as integer PPM via the half-up device (numerator 2·tri·1e6,
-    denominator deg·(deg−1), both exact longs), so the ratio of two
-    integer counts never rides a float — the q_exact_median_by_group
-    contract. Nodes with deg < 2 are excluded (coefficient undefined).
-
-    Degree bound: the PPM numerator is 4·tri·1e6 + deg·(deg−1) and
-    tri(u) can grow ~deg², so signed-long exactness holds up to
-    deg ≈ 2^21 (~2M neighbours); beyond that hubs need a decimal
-    intermediate. Real-graph hubs (web, social) sit far below this,
-    and degree-capped preprocessing (k_core / degree truncation above)
-    is the standard guard at fleet scale.
-
-    Scale: reuses triangle_counts' canonical wedge closure (its cost
-    profile and skew note apply verbatim); the degree relation is one
-    extra map-side-combined groupBy over the same canonical edge list,
-    and the final join is node-keyed — dim-sized output.
-    """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .where(F.col("deg") >= 2)
-    )
-    tri = triangle_counts(und.select(F.col("a").alias("src"), F.col("b").alias("dst")))
-    pairs = (F.col("deg") * (F.col("deg") - F.lit(1).cast("long"))).cast("long")
-    num = 2 * (2 * F.coalesce(F.col("n_tri"), F.lit(0).cast("long"))) * F.lit(
-        1_000_000
-    ).cast("long") + pairs
-    # Both join inputs descend from the stats-free localCheckpoint, so
-    # Catalyst defaults to SortMergeJoin; the node-keyed relation needs no
-    # ordering — hint the hash form (the statless-self-join convention,
-    # tests/test_plan_shapes.py round-8 budgets).
-    return (
-        deg.join(tri.hint("shuffle_hash"), "node", "left")
-        .select(
-            "node",
-            "deg",
-            F.coalesce(F.col("n_tri"), F.lit(0).cast("long")).alias("n_tri"),
-            F.call_function("div", num, 2 * pairs).alias("cc_ppm"),
-        )
-    )
-
-
-def spectral_bipartition(
-    edges: DataFrame, iterations: int = 4, scale: int = 1_000_000
-) -> DataFrame:
-    """Fiedler-style spectral bipartition of the undirected weighted
-    graph of ``edges`` (src, dst, w): power iteration on the shifted
-    Laplacian M = c·I − L (c = 2·max_deg so every eigenvalue of M is
-    nonnegative and the dominant one, c, belongs to the constant
-    vector), with the constant component deflated EXACTLY each round by
-    the division-free centering ``n·x − Σx`` — after deflation the
-    dominant remaining direction is the Fiedler vector (algebraic
-    connectivity), whose sign structure is the classic minimum-ish cut.
-
-    Determinism (the pagerank device, applied to an eigen-solve): the
-    matvec ``(c − deg)·v + Σ w·v(neighbor)`` is pure long arithmetic;
-    centering multiplies by n instead of dividing; the ONE float op per
-    round is the max-abs normalization ``round(cv / max|cv| · scale)``,
-    replayed operand-for-operand in SQL (boundary hits are measure-zero
-    — the ln/sqrt precedent). Fixed iteration count keeps the operator a
-    replayable relation; magnitudes stay < ~1e14 ≪ 2^52.
-
-    Returns (node, v_scaled, side) — side = 'A' where the final iterate
-    is ≥ 0.
-
-    Scale: per round ONE v⋈edges join on the neighbor id + a map-side
-    partial sum (identical profile to pagerank's contrib join) and two
-    1-row aggregates broadcast back; localCheckpoint truncates lineage
-    per round. The state relation is node-sized — tiny for the nation
-    graph, partition-parallel for a billion-node one.
-    """
-    sym = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(F.col("src").alias("a"), F.col("dst").alias("b"), "w")
-        .unionAll(
-            edges.where(F.col("src") != F.col("dst")).select(
-                F.col("dst").alias("a"), F.col("src").alias("b"), "w"
-            )
-        )
-        .groupBy("a", "b")
-        .agg(F.sum("w").alias("w"))
-        .localCheckpoint()
-    )
-    deg = (
-        sym.groupBy(F.col("a").alias("node"))
-        .agg(F.sum("w").alias("deg"))
-        .localCheckpoint()
-    )
-    consts = deg.agg(
-        (F.lit(2) * F.max("deg")).cast("long").alias("c"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-
-    def center_norm(rel: DataFrame, col: str) -> DataFrame:
-        """n·x − Σx, then round(cv / max|cv| · scale) — one snapped
-        division; GREATEST(max,1) guards the all-zero degenerate.
-
-        ONE 1-row aggregate per round (round-12 VERDICT #2 fusion):
-        cv = n·x − Σx is linear in x with n > 0, so max|cv| over the
-        relation is attained at min(x) or max(x) — computing (Σx, min x,
-        max x) in a single pass gives the exact same max|cv| the old
-        second aggregate measured, in pure long arithmetic, and spares
-        re-deriving the centered relation for the max scan."""
-        stats = rel.agg(
-            F.sum(col).alias("sx"),
-            F.min(col).alias("mn"),
-            F.max(col).alias("mxv"),
-        )
-        return (
-            rel.crossJoin(F.broadcast(consts))
-            .crossJoin(F.broadcast(stats))
-            .select(
-                "node",
-                (F.col("n") * F.col(col) - F.col("sx")).alias("cv"),
-                F.greatest(
-                    F.abs(F.col("n") * F.col("mxv") - F.col("sx")),
-                    F.abs(F.col("n") * F.col("mn") - F.col("sx")),
-                    F.lit(1).cast("long"),
-                ).alias("mx"),
-            )
-            .select(
-                "node",
-                F.round(
-                    F.col("cv").cast("double")
-                    / F.col("mx")
-                    * F.lit(float(scale)),
-                    0,
-                )
-                .cast("long")
-                .alias("v"),
-            )
-        )
-
-    from ..functions.scalar import stable_hash_p31
-
-    h0 = deg.select(
-        "node",
-        (
-            stable_hash_p31(
-                F.concat(F.lit("spec-v1:"), F.col("node").cast("string"))
-            )
-            % 2001
-        ).alias("x"),
-    )
-    v = center_norm(h0, "x").localCheckpoint()
-    for _ in range(loop_rounds(iterations)):
-        neigh = (
-            sym.join(v.select(F.col("node").alias("b"), "v"), "b")
-            .groupBy(F.col("a").alias("node"))
-            .agg(F.sum(F.col("w") * F.col("v")).alias("nv"))
-        )
-        mv = (
-            deg.join(v, "node")
-            .join(neigh, "node", "left")
-            .crossJoin(F.broadcast(consts))
-            .select(
-                "node",
-                (
-                    (F.col("c") - F.col("deg")) * F.col("v")
-                    + F.coalesce(F.col("nv"), F.lit(0).cast("long"))
-                ).alias("mv"),
-            )
-            # lazy stub: materialized by center_norm's stats aggregate,
-            # then the centered projection reads the stub instead of
-            # re-running the deg⋈v⋈neigh round body a second time
-            .transform(loop_ckpt_lazy)
-        )
-        v = center_norm(mv, "mv").transform(loop_ckpt_lazy)
-    return v.select(
-        F.col("node").cast("long").alias("node"),
-        F.col("v").alias("v_scaled"),
-        F.when(F.col("v") >= 0, F.lit("A")).otherwise(F.lit("B")).alias("side"),
-    )
-
-
-def boruvka_components(
-    edges: DataFrame, rounds: int = 2, merge_steps: int = 3
-) -> DataFrame:
-    """Bounded-round Borůvka minimum-spanning-forest contraction — the
-    greedy/matroid member of the graph family (components: connectivity,
-    PageRank: centrality, triangles: closure, spectral: structure,
-    Borůvka: lightest skeleton). Each round every component selects its
-    MINIMUM-weight outgoing edge under the total order (w, a, b) — the
-    tiebreak that makes classic Borůvka (notoriously tie-ambiguous)
-    fully deterministic and therefore SQL-replayable — and components
-    connected by chosen edges merge to their minimum label via
-    ``merge_steps`` synchronous label steps (chosen edges form a
-    pseudo-forest; min-label closure over it needs O(chain) steps, and
-    the FIXED prefix is the replayable contract, as in kcore_peel).
-
-    Input ``edges``: (src, dst, w) directed; symmetrized to canonical
-    a<b pairs keeping the MIN weight per pair. Returns (node, *comp_r{k}
-    for each round) — the component labels after every round, so the
-    oracle adjudicates each contraction, not just the final state.
-
-    Scale: per round one crossing-filter join (labels⋈edges, node-keyed),
-    one per-label min_by aggregate (map-side combinable — each partition
-    offers one candidate per label), and ``merge_steps`` joins on the
-    CHOSEN-edge relation, which has at most one edge per component —
-    vanishing next to the edge list. localCheckpoint per round.
-    """
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-            F.col("w"),
-        )
-        .groupBy("a", "b")
-        .agg(F.min("w").alias("w"))
-        .localCheckpoint()
-    )
-    nodes = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    lab = nodes.select("node", F.col("node").alias("comp"))
-    out = nodes
-    for k in range(1, loop_rounds(rounds) + 1):
-        la = lab.select(F.col("node").alias("a"), F.col("comp").alias("ca"))
-        lb = lab.select(F.col("node").alias("b"), F.col("comp").alias("cb"))
-        crossing = (
-            und.join(la.hint("shuffle_hash"), "a")
-            .join(lb.hint("shuffle_hash"), "b")
-            .where(F.col("ca") != F.col("cb"))
-        )
-        # each endpoint component bids; min edge per component under
-        # (w, a, b) — min_by on the packed struct keeps it one aggregate
-        cand = crossing.select(
-            F.explode(F.array("ca", "cb")).alias("l"),
-            F.struct("w", "a", "b").alias("e"),
-        )
-        chosen = (
-            cand.groupBy("l")
-            .agg(F.min("e").alias("e"))
-            .select("e.a", "e.b")
-            .distinct()
-            .transform(loop_ckpt)
-        )
-        # merge: min-label propagation over the chosen pseudo-forest
-        m = lab
-        for _ in range(loop_rounds(merge_steps)):
-            n1 = chosen.join(
-                m.select(F.col("node").alias("b"), F.col("comp").alias("nc")),
-                "b",
-            ).select(F.col("a").alias("node"), "nc")
-            n2 = chosen.join(
-                m.select(F.col("node").alias("a"), F.col("comp").alias("nc")),
-                "a",
-            ).select(F.col("b").alias("node"), "nc")
-            m = (
-                m.join(
-                    n1.unionAll(n2)
-                    .groupBy("node")
-                    .agg(F.min("nc").alias("nmin")),
-                    "node",
-                    "left",
-                )
-                .select(
-                    "node",
-                    F.least(
-                        F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))
-                    ).alias("comp"),
-                )
-                .transform(loop_ckpt)
-            )
-        lab = m
-        # statless checkpoint x checkpoint node join — hash, never SMJ
-        # (the clustering_coefficient convention)
-        out = out.join(
-            lab.select("node", F.col("comp").alias(f"comp_r{k}")).hint(
-                "shuffle_hash"
-            ),
-            "node",
-        )
-    return out.select(
-        F.col("node").cast("long").alias("node"),
-        *[F.col(f"comp_r{k}").cast("long") for k in range(1, loop_rounds(rounds) + 1)],
-    )
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    iterations: int = 3,
-    damping: float = 0.85,
-) -> DataFrame:
-    """Personalized PageRank: the random walk RESTARTS at the ``seeds``
-    relation (one ``node`` column) instead of everywhere — rank becomes
-    proximity-to-the-seed-set, the graph-based recommendation/expansion
-    primitive ("what's close to what I already like") that global
-    PageRank's topic-free centrality can't express.
-
-    Same determinism contract as :func:`pagerank` (nano-unit integer
-    ranks, every edge contribution snapped BEFORE the per-node sum) with
-    one change: the teleport mass (1-d) is split over the |S| seed nodes
-    only — non-seeds receive mass exclusively through in-edges, so
-    unreachable-from-seeds nodes decay to 0 across iterations. The same
-    unrolled SQL replay adjudicates every iterate.
-
-    Scale: identical profile to pagerank (per iteration one ranks⋈edges
-    join + one partial agg); the seed relation is a broadcast semi-join
-    flag on the node list, computed once.
-    """
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    e = (
-        edges.join(out_w, "src")
-        .select("src", "dst", "w", "out_w")
-        .localCheckpoint()
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(F.broadcast(seeds.select("node").distinct()
-                          .withColumn("__seed", F.lit(1))), "node", "left")
-        .select("node", F.coalesce("__seed", F.lit(0)).alias("is_seed"))
-        .localCheckpoint()
-    )
-    n_seeds = nodes.where(F.col("is_seed") == 1).count()
-    if n_seeds == 0:
-        # keep the schema IDENTICAL to the normal path (node, is_seed,
-        # rank_nano) so downstream consumers / oracle compare never branch
-        return nodes.select(
-            F.col("node").cast("long").alias("node"),
-            F.col("is_seed").cast("int").alias("is_seed"),
-            F.lit(0).cast("long").alias("rank_nano"),
-        )
-    base = int((1.0 - damping) * NANO / n_seeds + 0.5)
-    init = int(NANO / n_seeds + 0.5)
-    ranks = nodes.select(
-        "node",
-        "is_seed",
-        (F.col("is_seed") * F.lit(init)).cast("long").alias("rank_nano"),
-    )
-    for _ in range(loop_rounds(iterations)):
-        contrib = (
-            e.join(ranks.select("node", "rank_nano"), e["src"] == F.col("node"))
-            .select(
-                F.col("dst").alias("node"),
-                F.round(
-                    F.col("rank_nano") * damping * F.col("w") / F.col("out_w"),
-                    0,
-                )
-                .cast("long")
-                .alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_nano"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                "is_seed",
-                (
-                    F.col("is_seed") * F.lit(base)
-                    + F.coalesce(F.col("in_nano"), F.lit(0))
-                )
-                .cast("long")
-                .alias("rank_nano"),
-            )
-            .transform(loop_ckpt_lazy)
-        )
-    return ranks.select(
-        F.col("node").cast("long").alias("node"),
-        F.col("is_seed").cast("int").alias("is_seed"),
-        "rank_nano",
-    )
-
-
-def scc_first_peel(edges: DataFrame, rounds: int = 4) -> DataFrame:
-    """First peel of the distributed SCC COLORING algorithm (Orzan's
-    coloring / the label step of FW-BW) over directed ``edges``
-    (src, dst) — the directed completion of the connected-components
-    family: components answers "together under ANY path", SCC answers
-    "mutually reachable".
-
-    Round 1 (coloring): forward min-label propagation to a fixed-round
-    fixpoint gives color f(v) = min id that reaches v (v included).
-    Round 2 (peel): within each color class, the SCC containing the
-    class root p = f(v) is exactly {v : f(v) = p and v reaches p};
-    reachability of the OWN root propagates backward along the
-    color-preserving subgraph (an edge v->u can carry "reaches p" from u
-    to v only when both sides wear color p — crossing colors would leak
-    reachability through a different class). Nodes the peel does not
-    claim get scc_id -1: they are singletons or members of deeper SCCs a
-    second peel on the residual graph would extract — the documented
-    one-peel contract (same fixed-round honesty as components/pagerank).
-
-    Returns (node, color, scc_id) — scc_id = color for peeled nodes,
-    -1 otherwise.
-
-    Scale: identical profile to the other iterative graph operators —
-    per round ONE edges x state join + ONE map-side-combined min/max
-    agg; the colored subgraph is derived once after coloring converges.
-    loop_ckpt/loop_rounds make the per-iteration body plan-auditable.
-    """
-    e = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct().localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    # SELF-LOOP form of both propagation loops (round-13, guide §2.4 +
-    # the loop_ckpt_lazy multi-consumer rule): augmenting the edge
-    # relation with identity edges folds "keep my own value" into the
-    # same min/max aggregate as the neighbor update —
-    # min(f(v), min_nbr f) == min over (in-neighbors ∪ self) — so each
-    # round consumes the loop state exactly ONCE (one join + one
-    # map-side-combined agg, no second state⋈update join), which makes
-    # the LAZY checkpoint safe (single consumer stage per round; the
-    # two-consumer form measured ~5 s lazy vs ~3 s eager). Values are
-    # identical: the self edge contributes exactly the node's own label.
-    eself = e.unionByName(
-        nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-    ).localCheckpoint()
-    f = nodes.withColumn("f", F.col("node")).transform(loop_ckpt)
-    for _ in range(loop_rounds(rounds)):
-        f = (
-            eself.join(f, eself["src"] == f["node"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("f").alias("f"))
-            .transform(loop_ckpt_lazy)
-        )
-    # converged colors feed FOUR consumers (ecol twice, r-init, final
-    # projection) — materialize once, eagerly
-    f = f.localCheckpoint()
-    # color-preserving subgraph, derived once (setup for the peel loop);
-    # self-loops are trivially color-preserving, giving the peel loop
-    # the same single-consumer shape
-    ecol = (
-        e.join(f.select(F.col("node").alias("src"), F.col("f").alias("fs")), "src")
-        .join(f.select(F.col("node").alias("dst"), F.col("f").alias("fd")), "dst")
-        .where(F.col("fs") == F.col("fd"))
-        .select("src", "dst")
-        .unionByName(
-            nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-        )
-        .localCheckpoint()
-    )
-    r = (
-        f.select("node", (F.col("node") == F.col("f")).cast("int").alias("r"))
-        .transform(loop_ckpt)
-    )
-    for _ in range(loop_rounds(rounds)):
-        # r(v) <- max over (color-preserving out-neighbors ∪ self) of r:
-        # "reaches the root" flows backward along v->u edges
-        r = (
-            ecol.join(r, ecol["dst"] == r["node"])
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.max("r").alias("r"))
-            .transform(loop_ckpt_lazy)
-        )
-    # statless checkpoint x checkpoint node join — hash, never SMJ
-    # (the clustering_coefficient convention)
-    return r.join(f.hint("shuffle_hash"), "node").select(
-        F.col("node").cast("long").alias("node"),
-        F.col("f").cast("long").alias("color"),
-        F.when(F.col("r") == 1, F.col("f")).otherwise(F.lit(-1))
-        .cast("long")
-        .alias("scc_id"),
-    )
-
-
-def pagerank_resume(
-    edges: DataFrame,
-    init_ranks: DataFrame,
-    iterations: int = 1,
-    damping: float = 0.85,
-) -> DataFrame:
-    """WARM-START PageRank: continue the iteration on a (possibly
-    changed) edge relation from a previous rank vector — the incremental
-    graph-maintenance member of the family beside
-    dedup.incremental (new-vs-historical band probe) and
-    q_incremental_mv (mergeable agg state). When the graph drifts
-    slightly between ingests, resuming from yesterday's ranks for one
-    or two rounds replaces a full k-round recompute from the uniform
-    init — per-round cost is identical, so the saving IS the dropped
-    rounds, and at 100 TB rounds are full scans.
-
-    ``init_ranks``: (node, rank_nano). Nodes new to the graph start at
-    the NEW graph's uniform init (they have no history); departed nodes
-    drop out via the new node set. Same determinism contract as
-    :func:`pagerank` (nano-snapped contributions), so the warm round
-    replays exactly in SQL.
-    """
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    e = (
-        edges.join(out_w, "src")
-        .select("src", "dst", "w", "out_w")
-        .localCheckpoint()
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank_nano", F.lit(0).cast("long"))
-    base = int((1.0 - damping) * NANO / n + 0.5)
-    r_init = int(NANO / n + 0.5)
-    ranks = (
-        nodes.join(init_ranks.withColumnRenamed("rank_nano", "prev"), "node", "left")
-        .select(
-            "node",
-            F.coalesce("prev", F.lit(r_init)).cast("long").alias("rank_nano"),
-        )
-        .localCheckpoint()
-    )
-    for _ in range(loop_rounds(iterations)):
-        contrib = (
-            e.join(ranks, e["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                F.round(
-                    F.col("rank_nano") * damping * F.col("w") / F.col("out_w"),
-                    0,
-                )
-                .cast("long")
-                .alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_nano"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (F.lit(base) + F.coalesce(F.col("in_nano"), F.lit(0)))
-                .cast("long")
-                .alias("rank_nano"),
-            )
-            .transform(loop_ckpt_lazy)
-        )
-    return ranks.select(F.col("node").cast("long").alias("node"), "rank_nano")
-
-
-def pagerank_dangling(
-    edges: DataFrame, iterations: int = 3, damping: float = 0.85
-) -> DataFrame:
-    """PageRank with DANGLING-MASS REDISTRIBUTION — the textbook-complete
-    variant closing :func:`pagerank`'s documented simplification (sink
-    nodes' rank silently leaks there): each round the danglers' total
-    rank D is a 1-row aggregate, and every node receives
-    round(d * D / n) back alongside its in-edge contributions, so total
-    mass stays ~1.0 whatever the graph's sink structure (drift bounded
-    by per-term snapping only — gate-tested).
-
-    Exactness: D is an exact long (sum of longs); the redistribution
-    term is ONE snapped scalar double expression, identical cross-engine
-    — the same nano contract as the per-edge contributions. Scale: the
-    extra cost per round is one broadcast 1-row aggregate over the
-    rank relation; the join/agg shape is unchanged.
-    """
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    e = (
-        edges.join(out_w, "src")
-        .select("src", "dst", "w", "out_w")
-        .localCheckpoint()
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = nodes.count()
-    if n == 0:
-        return nodes.withColumn("rank_nano", F.lit(0).cast("long"))
-    base = int((1.0 - damping) * NANO / n + 0.5)
-    srcs = e.select("src").distinct()
-    dangling = nodes.join(
-        srcs, nodes["node"] == srcs["src"], "left_anti"
-    ).localCheckpoint()
-    ranks = nodes.withColumn(
-        "rank_nano", F.lit(int(NANO / n + 0.5)).cast("long")
-    )
-    for _ in range(loop_rounds(iterations)):
-        d_mass = dangling.join(ranks, "node").agg(
-            F.coalesce(F.sum("rank_nano"), F.lit(0)).alias("d_mass")
-        )
-        contrib = (
-            e.join(ranks, e["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                F.round(
-                    F.col("rank_nano") * damping * F.col("w") / F.col("out_w"),
-                    0,
-                )
-                .cast("long")
-                .alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_nano"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(d_mass))
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.coalesce(F.col("in_nano"), F.lit(0))
-                    + F.round(F.col("d_mass") * damping / n, 0).cast("long")
-                )
-                .cast("long")
-                .alias("rank_nano"),
-            )
-            # lazy is SAFE here despite ranks having two per-round readers
-            # (the d_mass aggregate and the contribution join) because the
-            # readers are ORDERED, not parallel: the next round's first job
-            # builds the d_mass BROADCAST, whose build executes the ranks
-            # stub and fills its cache before the main stage's contribution
-            # join ever reads it. Measured: driver r12->r13 1.86->1.72 s
-            # (q_pagerank_trade shares this loop). If the broadcast build
-            # is ever reordered after the join, revert to eager loop_ckpt
-            # (the dominant_edge_matching pathology).
-            .transform(loop_ckpt_lazy)
-        )
-    return ranks.select(F.col("node").cast("long").alias("node"), "rank_nano")
-
-
-def ktruss_edges(edges: DataFrame, k: int = 4, rounds: int = 2) -> DataFrame:
-    """K-TRUSS peeling — the EDGE-cohesion companion of :func:`kcore_peel`
-    (node degrees): an edge survives iff it participates in at least k-2
-    triangles among surviving edges. Per round: count each edge's
-    triangle support (common neighbors in the current edge set), drop
-    light edges, repeat. Fixed ``rounds`` keeps the relation replayable
-    (the components/pagerank contract); trusses stabilize in few rounds
-    on small-diameter graphs — convergence is gate-tested against a
-    deeper run like q_scc_trade.
-
-    Returns surviving canonical edges with their final support:
-    (a, b, support).
-
-    Scale: support counting is the triangle join (adjacency ⋈ adjacency
-    on the shared endpoint, then a semi-join against the edge set) —
-    the same bounded shape triangle_counts uses; each round's output is
-    a subset of its input, so the work SHRINKS per round.
-    """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    e = und
-    for _ in range(loop_rounds(rounds)):
-        # adjacency (both directions) of the CURRENT edge set
-        adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-        # common neighbors of (a, b): w adjacent to both
-        wedges = (
-            e.join(
-                adj.select(F.col("u").alias("a"), F.col("v").alias("w")).hint(
-                    "shuffle_hash"
-                ),
-                "a",
-            )
-            .join(
-                adj.select(
-                    F.col("u").alias("b"), F.col("v").alias("w")
-                ).hint("shuffle_hash"),
-                ["b", "w"],
-            )
-            .groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("support"))
-        )
-        e = (
-            e.select("a", "b")  # support recomputes every round
-            .join(wedges, ["a", "b"], "left")
-            .select(
-                "a",
-                "b",
-                F.coalesce("support", F.lit(0)).cast("long").alias("support"),
-            )
-            .where(F.col("support") >= k - 2)
-            .transform(loop_ckpt)
-        )
-    return e.select(
-        F.col("a").cast("long").alias("a"),
-        F.col("b").cast("long").alias("b"),
-        "support",
-    )
-
-
-def link_prediction_scores(edges: DataFrame) -> DataFrame:
-    """Link prediction over the undirected graph of ``edges`` (src, dst):
-    for every NON-adjacent pair sharing at least one neighbor, the two
-    classic proximity scores — common-neighbor count and Adamic-Adar
-    (sum over shared neighbors z of 1/ln(deg(z)), which discounts hub
-    intermediaries). The graph-task class the centrality/closure family
-    doesn't cover: predicting edges that aren't there yet (recommender
-    candidate generation, knowledge-graph completion).
-
-    Returns (u, v, cn, aa_micro) with u < v; ``aa_micro`` sums per-z
-    terms ROUND-snapped to integer micro-units FIRST, so the order-free
-    long sum is engine-exact (1/ln of an integer degree is irrational —
-    boundary hits are measure-zero; never FLOOR-snap a transcendental).
-    A wedge center has >= 2 neighbors, so ln(deg(z)) >= ln 2 and the
-    division is always defined.
-
-    Shape: degree agg + one wedge self-join on the center node + an
-    anti-join against the edge set — triangle_counts' complexity
-    (sum of deg(z)^2 candidate pairs); on power-law graphs cap hub
-    degrees upstream the way the dedup posting joins cap df.
-    """
-    # und feeds four consumers (both wedge sides via adj, deg, the
-    # anti-join): localCheckpoint or the whole edge lineage re-plans per
-    # consumer AND the statless stubs SMJ (the mad_outliers precedent)
-    und = (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    adj = und.select(F.col("a").alias("z"), F.col("b").alias("n")).unionAll(
-        und.select(F.col("b").alias("z"), F.col("a").alias("n"))
-    )
-    deg = adj.groupBy("z").agg(F.count(F.lit(1)).alias("deg"))
-    nbr = adj.join(F.broadcast(deg), "z")
-    l = nbr.select("z", F.col("n").alias("u"), "deg")
-    r = nbr.select(F.col("z").alias("z2"), F.col("n").alias("v"))
-    # wedge self-join on the center node: shuffle_hash, not broadcast —
-    # the one join that stays data-sized on a vocabulary/entity graph
-    wedge = l.join(
-        r.hint("shuffle_hash"),
-        (F.col("z") == F.col("z2")) & (F.col("u") < F.col("v")),
-    )
-    cand = wedge.join(
-        F.broadcast(und),
-        (F.col("u") == F.col("a")) & (F.col("v") == F.col("b")),
-        "left_anti",
-    )
-    return cand.groupBy("u", "v").agg(
-        F.count(F.lit(1)).alias("cn"),
-        F.sum(F.round(1000000.0 / F.log(F.col("deg").cast("double")), 0).cast("long"))
-        .alias("aa_micro"),
-    )
-
-
-def modularity_contributions(edges: DataFrame) -> DataFrame:
-    """Per-community Newman-modularity contributions for an undirected
-    edge list whose endpoint COMMUNITIES are already attached — input
-    columns (cn, sn) = community of each endpoint, one row per edge.
-    Emits (community, e_c, d_c, m, q_contrib_num) with q_contrib_num =
-    4m·e_c − d_c², i.e. Q·4m² split by community (division-free; see
-    q_graph_modularity for the reconstruction identity).
-
-    Scale: the input edge relation is read by three bounded aggs (1-row
-    m, intra count, endpoint-incidence count) — callers should
-    localCheckpoint a computed edge list; community keys are the only
-    shuffle keys.
-    """
-    m = edges.agg(F.count(F.lit(1)).cast("long").alias("m"))
-    intra = (
-        edges.where(F.col("cn") == F.col("sn"))
-        .groupBy(F.col("cn").alias("community"))
-        .agg(F.count(F.lit(1)).cast("long").alias("e_c"))
-    )
-    degsum = (
-        edges.select(F.col("cn").alias("community"))
-        .unionByName(edges.select(F.col("sn").alias("community")))
-        .groupBy("community")
-        .agg(F.count(F.lit(1)).cast("long").alias("d_c"))
-    )
-    return (
-        degsum.join(F.broadcast(intra), "community", "left")
-        .crossJoin(F.broadcast(m))
-        .select(
-            "community",
-            F.coalesce("e_c", F.lit(0)).cast("long").alias("e_c"),
-            "d_c",
-            "m",
-            (
-                4 * F.col("m") * F.coalesce("e_c", F.lit(0))
-                - F.col("d_c") * F.col("d_c")
-            )
-            .cast("long")
-            .alias("q_contrib_num"),
-        )
-    )
-
-
-def temporal_wedges(e: DataFrame, window_days: int = 7) -> DataFrame:
-    """Time-respecting wedge counts over a temporal bipartite edge list
-    ``e(c, s, d)`` (customer, supplier, integer day): ordered pairs of
-    DISTINCT customers hitting the same supplier with the second arrival
-    in [d1, d1 + window]. The window join is the LOSSLESS binned range
-    join — ``window_days``-wide bins, each edge probes its own and the
-    next bin (a 0..window successor always lands in one of the two) —
-    so candidates are bounded per (supplier, bin), never per supplier.
-    Returns (s, n_wedges, n_src_customers).
-    """
-    spark = e.sparkSession
-    a = e.select(
-        "s", F.col("c").alias("c1"), F.col("d").alias("d1"),
-        F.floor(F.col("d") / window_days).alias("bin"),
-    )
-    offs = spark.range(0, 2).select(F.col("id").alias("off"))
-    b = e.select(
-        F.col("s").alias("s2"), F.col("c").alias("c2"),
-        F.col("d").alias("d2"),
-        F.floor(F.col("d") / window_days).alias("bin2"),
-    )
-    w = a.crossJoin(F.broadcast(offs)).join(
-        b.hint("shuffle_hash"),
-        (F.col("s2") == F.col("s"))
-        & (F.col("bin2") == F.col("bin") + F.col("off"))
-        & (F.col("c2") != F.col("c1"))
-        & (F.col("d2") >= F.col("d1"))
-        & (F.col("d2") <= F.col("d1") + window_days),
-    )
-    return w.groupBy("s").agg(
-        F.count(F.lit(1)).cast("long").alias("n_wedges"),
-        F.countDistinct("c1").cast("long").alias("n_src_customers"),
-    )
-
-
-def betweenness_exact(edges: DataFrame, max_depth: int = 4) -> DataFrame:
-    """EXACT betweenness centrality (Brandes' quantity, computed via the
-    pair-counting identity rather than the backward-dependency pass):
-    bc(v) = SUM over ordered pairs (s, t), s != v != t, of
-    sigma_st(v) / sigma_st, where sigma_st counts shortest s->t paths
-    and sigma_st(v) those through v. The identity used here is
-    sigma_st(v) = sigma_sv * sigma_vt whenever d(s,v) + d(v,t) = d(s,t)
-    — so ALL-PAIRS distances + path counts suffice, no per-source
-    dependency recursion. Each pair's ratio snaps with the half-up
-    integer device (2*num*1e6 + den) div (2*den) — exact, no float —
-    and bc_micro is the integer sum of snapped terms.
-
-    Levels are capped at ``max_depth``: pairs farther apart contribute
-    nothing (none exist on graphs whose diameter fits the cap — the
-    caller's contract, gate-tested by asserting the next frontier is
-    empty). Multi-source BFS: the frontier relation starts as one row
-    per node and every expansion is ONE join against the edge relation
-    + one groupBy summing path counts — node^2-bounded state, never
-    corpus-scale.
-
-    Scale: everything here runs on the node-level relation (the edge
-    build is the caller's corpus-scale stage); the final triple join is
-    |nodes|^3-bounded with both sides broadcast-joinable. For graphs
-    with millions of nodes, exact APSP is the wrong tool everywhere —
-    the standard move is Brandes over sampled sources, which reuses
-    this operator's frontier loop with a sampled l0.
-    """
-    e = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
-    e = e.localCheckpoint()  # read every BFS round + nothing else
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    frontier = nodes.select(
-        F.col("node").alias("s"),
-        F.col("node").alias("v"),
-        F.lit(0).alias("d"),
-        F.lit(1).cast("long").alias("sig"),
-    ).localCheckpoint()
-    dist = frontier
-    for k in range(1, max_depth + 1):
-        expanded = (
-            frontier.join(e, frontier["v"] == e["src"])
-            .groupBy("s", F.col("dst").alias("v2"))
-            .agg(F.sum("sig").cast("long").alias("sig"))
-        )
-        frontier = (
-            expanded.join(
-                # node^2-bounded: broadcast the reached-set anti side so
-                # the stats-less checkpoint stubs can't force SMJ
-                F.broadcast(dist.select("s", F.col("v").alias("v2"))),
-                ["s", "v2"],
-                "anti",
-            )
-            .select(
-                "s",
-                F.col("v2").alias("v"),
-                F.lit(k).alias("d"),
-                "sig",
-            )
-            .localCheckpoint()
-        )
-        dist = dist.unionByName(frontier).localCheckpoint()
-    a = dist.select(
-        F.col("s"), F.col("v"), F.col("d").alias("da"), F.col("sig").alias("siga")
-    )
-    # b is the same relation read as (v -> t) legs
-    b = dist.select(
-        F.col("s").alias("v_b"),
-        F.col("v").alias("t"),
-        F.col("d").alias("db"),
-        F.col("sig").alias("sigb"),
-    )
-    c = dist.select(
-        F.col("s").alias("s_c"),
-        F.col("v").alias("t_c"),
-        F.col("d").alias("dc"),
-        F.col("sig").alias("sigc"),
-    )
-    terms = (
-        # every side is the node^2-bounded dist relation — broadcast the
-        # probe sides (checkpoint stubs carry no stats, SMJ otherwise)
-        a.join(F.broadcast(b), a["v"] == b["v_b"])
-        .join(
-            F.broadcast(c),
-            (F.col("s") == F.col("s_c"))
-            & (F.col("t") == F.col("t_c"))
-            & (F.col("da") + F.col("db") == F.col("dc")),
-        )
-        .where(
-            (F.col("s") != F.col("v"))
-            & (F.col("v") != F.col("t"))
-            & (F.col("s") != F.col("t"))
-        )
-        .select(
-            "v",
-            F.call_function(
-                "div",
-                F.lit(2) * F.col("siga") * F.col("sigb") * F.lit(1_000_000)
-                + F.col("sigc"),
-                F.lit(2) * F.col("sigc"),
-            ).alias("term"),
-        )
-    )
-    return (
-        nodes.join(
-            F.broadcast(
-                terms.groupBy("v").agg(F.sum("term").cast("long").alias("bc"))
-            ),
-            nodes["node"] == F.col("v"),
-            "left",
-        )
-        .select(
-            "node", F.coalesce("bc", F.lit(0)).cast("long").alias("bc_micro")
-        )
-    )
-
-
-def dominant_edge_matching(edges: DataFrame, rounds: int = 4) -> DataFrame:
-    """Distributed greedy WEIGHTED MATCHING by locally-dominant edges
-    (Preis 1999 — the parallel matching kernel multilevel partitioners
-    like METIS run during graph coarsening): per round, an edge joins
-    the matching iff it is the best incident edge of BOTH endpoints
-    under the total order (w DESC, a ASC, b ASC); matched endpoints
-    leave the graph and the rest re-compete. Locally-dominant edges are
-    never adjacent (two adjacent edges cannot each be the shared
-    endpoint's best), so every round is conflict-free, and the result
-    is maximal once a round matches nothing — deterministic because the
-    order is total ((a, b) is unique per canonical edge).
-
-    Input ``edges``: canonical undirected (a < b, w positive long).
-    Returns (a, b, w, round) for matched edges.
-
-    Scale: per round ONE endpoint-keyed window over the 2|E| incidence
-    relation picks each node's best edge, two node-keyed joins confirm
-    mutual dominance, and two anti-joins retire matched endpoints —
-    every relation edge- or node-sized, lineage cut per round. Expected
-    rounds to maximality is O(log |E|) on arbitrary graphs.
-    """
-    from pyspark.sql import Window
-
-    alive = (
-        edges.select("a", "b", "w")
-        .where(F.col("a") < F.col("b"))
-        .localCheckpoint()
-    )
-    matched = None
-    for r in range(1, rounds + 1):
-        inc = alive.select(F.col("a").alias("node"), "a", "b", "w").unionByName(
-            alive.select(F.col("b").alias("node"), "a", "b", "w")
-        )
-        wbest = Window.partitionBy("node").orderBy(
-            F.desc("w"), F.asc("a"), F.asc("b")
-        )
-        best = (
-            inc.withColumn("rn", F.row_number().over(wbest))
-            .where(F.col("rn") == 1)
-            .select("node", F.col("a").alias("ba"), F.col("b").alias("bb"))
-            .localCheckpoint()  # both dominance joins read it (EAGER:
-            # the lazy form re-executed round chains through the
-            # broadcast builds — measured 2.7 s -> 9.5 s; see
-            # OPTIMIZATION_r13.md)
-        )
-        m = (
-            alive.join(
-                F.broadcast(best),
-                (F.col("node") == F.col("a"))
-                & (F.col("ba") == F.col("a"))
-                & (F.col("bb") == F.col("b")),
-            )
-            .drop("node", "ba", "bb")
-            .join(
-                F.broadcast(
-                    best.select(
-                        F.col("node").alias("node2"),
-                        F.col("ba").alias("ba2"),
-                        F.col("bb").alias("bb2"),
-                    )
-                ),
-                (F.col("node2") == F.col("b"))
-                & (F.col("ba2") == F.col("a"))
-                & (F.col("bb2") == F.col("b")),
-            )
-            .select("a", "b", "w", F.lit(r).cast("int").alias("round"))
-            .localCheckpoint()  # matched output + two node anti-joins
-        )
-        mn = m.select(F.col("a").alias("node")).unionByName(
-            m.select(F.col("b").alias("node"))
-        )
-        alive = (
-            alive.join(
-                F.broadcast(mn.withColumnRenamed("node", "a")), "a", "anti"
-            )
-            .join(F.broadcast(mn.withColumnRenamed("node", "b")), "b", "anti")
-            .localCheckpoint()
-        )
-        matched = m if matched is None else matched.unionByName(m)
-    return matched
-
-
-def luby_mis(edges: DataFrame, rounds: int = 3) -> DataFrame:
-    """Luby-style MAXIMAL INDEPENDENT SET via deterministic hash
-    priorities — the vertex symmetry-breaking primitive (the vertex
-    analog of ``dominant_edge_matching``: matching retires locally-
-    dominant EDGES, MIS admits locally-minimal NODES). Classic
-    distributed formulation (Luby 1986, the Pregel/GraphX textbook
-    kernel behind parallel coloring, scheduling and landmark selection),
-    derandomized for the oracle: each node's round priority is the
-    shared md5 residue ``stable_hash_p31('mis-v1:' || node)`` with the
-    node id as the total-order tiebreak, so both engines replay the
-    identical run.
-
-    Per round over the UNDECIDED subgraph: a node with no undecided
-    neighbor of strictly smaller (priority, id) joins the MIS (isolated
-    undecided nodes join trivially — empty neighbor set); MIS nodes and
-    their neighbors then retire. Maximality at the configured round
-    count is gate-tested (tests/test_graph.py asserts the next frontier
-    is empty), independence is an invariant of the admit rule.
-
-    ``edges``: undirected (a, b, ...) with a < b. Returns
-    (node, mis_round).
-
-    Scale: each round is one adjacency self-join keyed on node + one
-    anti-join — all relations node- or edge-sized; expected O(log n)
-    rounds. On billion-edge graphs the same rounds run with the
-    adjacency partitioned by node; the priority is recomputed per node,
-    never shuffled with the edges.
-    """
-    from ..functions.scalar import stable_hash_p31
-
-    def prio(col: str):
-        return stable_hash_p31(
-            F.concat(F.lit("mis-v1:"), F.col(col).cast("string"))
-        )
-
-    und = edges.select("a", "b").localCheckpoint()
-    # Round-13 restructure (guide §2.4 / §7.3): the dominance priority is
-    # a PURE FUNCTION of the node id, so it rides the edge relation as
-    # two computed columns instead of two per-round priority joins; and
-    # the undecided adjacency is MAINTAINED incrementally (filter by the
-    # round's retired set) instead of rebuilt from the full edge list
-    # with two semi-joins per round. Same admit rule, same rounds, same
-    # (node, mis_round) relation — ~4 fewer joins per round and a far
-    # smaller per-round plan.
-    ue = (
-        und.unionByName(
-            und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        .select("a", "b", prio("a").alias("pra"), prio("b").alias("prb"))
-        .localCheckpoint()
-    )
-    undecided = (
-        ue.select(F.col("a").alias("node")).distinct().localCheckpoint()
-    )
-    out = None
-    for r in range(1, loop_rounds(rounds) + 1):
-        # nodes beaten by an undecided neighbor of smaller (pr, id)
-        beaten = (
-            ue.where(
-                (F.col("prb") < F.col("pra"))
-                | ((F.col("prb") == F.col("pra")) & (F.col("b") < F.col("a")))
-            )
-            .select(F.col("a").alias("node"))
-            .distinct()
-        )
-        mis = loop_ckpt_lazy(
-            undecided.join(F.broadcast(beaten), "node", "anti").select(
-                "node", F.lit(r).cast("int").alias("mis_round")
-            )
-        )
-        retired = (
-            mis.select("node")
-            .unionByName(
-                ue.join(
-                    F.broadcast(mis.select(F.col("node").alias("b"))),
-                    "b",
-                    "semi",
-                ).select(F.col("a").alias("node"))
-            )
-            .distinct()
-        )
-        undecided = loop_ckpt_lazy(
-            undecided.join(F.broadcast(retired), "node", "anti")
-        )
-        ue = loop_ckpt_lazy(
-            ue.join(
-                F.broadcast(retired.select(F.col("node").alias("a"))),
-                "a",
-                "anti",
-            ).join(
-                F.broadcast(retired.select(F.col("node").alias("b"))),
-                "b",
-                "anti",
-            )
-        )
-        out = mis if out is None else out.unionByName(mis)
-    return out

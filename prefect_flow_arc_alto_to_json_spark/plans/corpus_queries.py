@@ -672,8 +672,8 @@ def q_set_cover_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rule w_t[d] ~ w_0[d] * exp(t * eta * loss[d]), domains = sources).
 # The per-domain loss is the mean token surprisal under the GLOBAL
 # unigram LM plus a PLANTED per-domain difficulty ramp (the corpus is
-# homogeneous, so without planting all weights would idle at ~1/20 —
-# the q_fdr_bh rationale); with it, mass must visibly migrate to the
+# homogeneous, so without planting all weights would idle at ~1/20);
+# with it, mass must visibly migrate to the
 # high-index domains over the rounds.
 _DM_ROUNDS = 3
 _DM_PLANT_MICRO = 20000  # planted difficulty step per source index

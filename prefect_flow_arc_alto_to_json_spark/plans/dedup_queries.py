@@ -434,7 +434,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Rotated to the extra tier in round 7: the graded window already
     # adjudicates near-dup pair generation via dedup_minhash_pairs; the
     # freed slot went to a family with no graded representative
-    # (q_zorder_index / mm_image_near_dup / q_pagerank_trade). Same
+    # (q_zorder_index / mm_image_near_dup). Same
     # oracle check runs in CI (tests/test_extra_queries.py).
     extra=True,
     oracle=f"""

@@ -67,8 +67,7 @@ def sim_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_near_dup",
     extra=True,  # rotated to the pytest tier: its banded sibling
     # sim_embedding_near_dup_lsh stays graded; this bounded cartesian
-    # baseline freed a graded slot for a unique family (the spectral
-    # class itself lives extra-tier: q_spectral_partition)
+    # baseline freed a graded slot for a unique family
     oracle=f"""
     WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id < 150
@@ -725,8 +724,8 @@ def sim_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     throughout, final per-vector assignment (vid, cent_id, n_cell). The
     DuckDB oracle unrolls the full iteration chain (c0→a1→c1→a2→c2→fin)
     from the SAME generator module — an ITERATIVE clustering algorithm
-    holding a per-row value oracle, completing the trio started by
-    dedup_components (label propagation) and q_pagerank_trade (ranks).
+    holding a per-row value oracle, beside dedup_components (label
+    propagation) and text_textrank_keywords (PageRank ranks).
 
     kmeans_refine (similarity.py) stays the float/BLAS production path;
     this is the replayable twin that proves the distributed Lloyd shape
@@ -2109,7 +2108,7 @@ def sim_facility_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.scale import literal_df, loop_ckpt_lazy, loop_rounds
 
     # Size-adaptive loop parallelism (round-14; the dedup_components /
-    # q_stable_matching / bpe_train precedent): the dot KERNEL above is
+    # bpe_train precedent): the dot KERNEL above is
     # materialized at full parallelism, but each greedy round is a
     # |pool|x|corpus|-row aggregate driven by a per-round collect — pure
     # task scheduling at 32 shuffle partitions when the kernel is small.

@@ -485,13 +485,13 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jensen-Shannon divergence between two corpus halves' TOKEN
     distributions (sources src0-src9 vs src10-src19) — the
-    vocabulary-level drift/contamination gate beside q_psi_drift's
-    feature-histogram one. Per-token KL(p||m) terms (m the mixture) are
-    micro-unit snapped before the totals, the unigram_logprob determinism
-    device, so the ln() survives cross-engine hashing; absent-token terms
-    are exactly 0 by the 0·ln0 convention, encoded as an explicit CASE on
-    both sides. Output: one row per union-vocab token with both counts
-    and both KL contributions, plus the symmetric JS total.
+    vocabulary-level drift/contamination gate. Per-token KL(p||m) terms
+    (m the mixture) are micro-unit snapped before the totals, the
+    unigram_logprob determinism device, so the ln() survives
+    cross-engine hashing; absent-token terms are exactly 0 by the 0·ln0
+    convention, encoded as an explicit CASE on both sides. Output: one
+    row per union-vocab token with both counts and both KL
+    contributions, plus the symmetric JS total.
 
     Scale: two scans collapse to ONE (the group tag is a column, not a
     split); the shuffle carries (token, partial counts) — vocabulary-
@@ -1097,8 +1097,9 @@ def text_quality_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     textstats.quality_score against the lang='en' label — the eval loop
     closed end-to-end inside the engine (score derivation AND its
     Mann-Whitney evaluation both value-oracled; the oracle reuses the
-    factored _QUALITY_CTES verbatim, then runs the same histogram
-    rank-sum as q_roc_auc on the resulting double scores — exact
+    factored _QUALITY_CTES verbatim, then runs the histogram rank-sum
+    of operators/quality.roc_auc_histogram on the resulting double
+    scores — exact
     because both engines derive bit-identical quality doubles from the
     integer micro-unit form).
     """
@@ -1841,7 +1842,7 @@ def text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "text_textrank_keywords",
     extra=True,
-    oracle=None,  # assembled below (shares graph_queries' iteration text)
+    oracle=None,  # assembled below from the unrolled _PR_ITER rounds
 )
 def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextRank keyword extraction — PageRank over the token
@@ -1851,8 +1852,8 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     TextRank ranks by centrality in the adjacency structure (the
     classic unsupervised keyphrase baseline). Reuses operators/graph.py:
     pagerank verbatim — 3 synchronous rounds, per-edge contributions
-    nano-snapped before the per-node sum — so the oracle is the same
-    triple-unrolled SQL as q_pagerank_trade over token-typed nodes.
+    nano-snapped before the per-node sum — so the oracle is the
+    triple-unrolled PageRank SQL over token-typed nodes.
 
     Scale: the bigram relation collapses map-side into the (w1, w2)
     count shuffle (vocabulary-bounded output); PageRank then runs
@@ -1893,7 +1894,24 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from .registry import EXTRA_ORACLES as _EO  # noqa: E402
-from .graph_queries import _SQL_ITER as _PR_ITER  # noqa: E402
+
+# One synchronous PageRank round in nano units (operators/graph.py:
+# pagerank), unrolled once per iteration in the oracle below.
+_PR_ITER = """
+    r{K} AS (
+      SELECT n2.node,
+             CAST((SELECT base FROM consts) + COALESCE(SUM(c), 0) AS BIGINT)
+               AS rank_nano
+      FROM nodes n2 LEFT JOIN (
+        SELECT e.dst AS node,
+               CAST(ROUND(r.rank_nano * 0.85 * e.w / o.out_w) AS BIGINT) AS c
+        FROM edges e
+        JOIN outw o ON o.src = e.src
+        JOIN r{P} r ON r.node = e.src
+      ) contrib ON contrib.node = n2.node
+      GROUP BY n2.node
+    )
+"""
 
 _EO["text_textrank_keywords"] = f"""
     WITH t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
@@ -1939,7 +1957,7 @@ def _unigram_oracle(maxlen: int = 8, plen: int = 4) -> str:
     piece scoring, the segment lattice, then one MATERIALIZED CTE pair
     (level + accumulated ball) per word position — levels are referenced
     by up to ``plen`` later ones AND the final join, so plain CTEs would
-    re-inline the chain (the q_spectral_partition fd-exhaustion class)."""
+    re-inline the chain and exhaust file descriptors)."""
     head = (
         """
     WITH words AS MATERIALIZED (

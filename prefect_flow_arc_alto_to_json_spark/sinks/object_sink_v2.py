@@ -1,9 +1,8 @@
 """Custom Python Data Source WRITER (Spark 4 ``pyspark.sql.datasource``)
 for the one-object-per-record sink — the V2 write-path form of
 sinks/objects.py (reference S4: one pretty-printed JSON object per
-document, flows/main_flow.py:79-92), completing the Python data source
-matrix (sources/url_source.py covers batch read,
-sources/catalog_stream.py streaming read; this is the write leg).
+document, flows/main_flow.py:79-92), the write leg beside the
+streaming read of sources/catalog_stream.py.
 
 What the V2 form adds over the foreachPartition sink: the WRITER COMMIT
 PROTOCOL. Each task stages its files under ``_staging/`` with opaque

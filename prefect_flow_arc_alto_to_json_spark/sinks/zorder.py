@@ -1,7 +1,7 @@
 """Z-order (Morton-curve) multi-dimensional layout — the at-rest file
 layout that makes MULTI-column range predicates prunable.
 
-Partitioning/bucketing (sinks/partitioned.py, sinks/bucketed.py) cluster
+Partitioning/bucketing (``partitionBy``, sinks/bucketed.py) cluster
 on ONE key; a filter on a second dimension still touches every file. The
 space-filling curve fixes that: bucket each dimension to ``bits`` bits,
 interleave the bits into one Morton code, range-partition + sort the data

@@ -116,12 +116,27 @@ def test_bpe_train_matches_python_model(spark, docs_words, k):
     assert got_vocab == ref_vocab, (texts, k)
 
 
-def test_unigram_viterbi_matches_bruteforce_optimum(spark):
+# Tie-heavy vocabulary: alternating a/b words closed under the a<->b swap,
+# so every substring count equals its mirror's (c(ab) = c(ba), c(abab) =
+# c(baba), ...). Piece scores are then symmetric under reversal, so each
+# odd-length (palindromic) word longer than one piece has at least two
+# equal-cost optimal segmentations: each one and its reversal.
+_TIE_HEAVY_WORDS = [
+    "ab", "ba", "aba", "bab", "abab", "baba", "ababa", "babab",
+    "ababab", "bababa", "abababa", "bababab", "abababab", "babababa",
+]
+
+
+def test_unigram_viterbi_matches_bruteforce_optimum(spark, sf_dir):
     """Independent pure-Python replay: rebuild piece scores from word
     counts, enumerate EVERY segmentation of every corpus word (len <= 8,
     pieces <= 4 -> at most 2^7 candidates), and check the operator's
     Viterbi cost equals the brute-force minimum, its reported pieces
-    concatenate back to the word, and their score sum equals the cost."""
+    concatenate back to the word, and their score sum equals the cost.
+    Among equal-cost segmentations the operator must pick the one with
+    the longest final piece (then the longest piece before it, and so
+    on) — checked on the documents corpus and on a tie-heavy vocabulary
+    where most words have several optimal segmentations."""
     import math
     from collections import Counter
 
@@ -130,41 +145,56 @@ def test_unigram_viterbi_matches_bruteforce_optimum(spark):
     )
     from prefect_flow_arc_alto_to_json_spark.sources import load_table
 
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "text"
-    )
-    rows = {r["word"]: r for r in unigram_viterbi(docs).collect()}
-
-    wc = Counter()
-    for (text,) in docs.collect():
-        for w in text.lower().split():
-            if w and len(w) <= 8:
-                wc[w] += 1
-    pc = Counter()
-    for w, c in wc.items():
-        for j in range(len(w)):
-            for l in range(1, min(4, len(w) - j) + 1):
-                pc[w[j : j + l]] += c
-    tot = sum(pc.values())
-    s = {p: round(-math.log(c / tot) * 1_000_000) for p, c in pc.items()}
-
-    def brute(w):
+    def segmentations(w):
         if not w:
-            return 0
-        return min(
-            s[w[:l]] + brute(w[l:]) for l in range(1, min(4, len(w)) + 1)
-        )
+            yield []
+            return
+        for l in range(1, min(4, len(w)) + 1):
+            for rest in segmentations(w[l:]):
+                yield [w[:l]] + rest
 
-    assert set(rows) == set(wc)
-    for w, r in rows.items():
-        assert r["wcount"] == wc[w]
-        want = brute(w)
-        assert r["vit_cost_micro"] == want, (w, r["vit_cost_micro"], want)
-        pieces = r["seg"].split("|")
-        assert "".join(pieces) == w
-        assert all(1 <= len(p) <= 4 for p in pieces)
-        assert sum(s[p] for p in pieces) == want
-        assert r["n_pieces"] == len(pieces)
+    tie_docs = spark.createDataFrame(
+        [(" ".join(_TIE_HEAVY_WORDS[k:] + _TIE_HEAVY_WORDS[:k]),)
+         for k in range(3)],
+        "text string",
+    )
+    corpora = {
+        "documents": load_table(spark, sf_dir, "documents").select("text"),
+        "tie_heavy": tie_docs,
+    }
+    for corpus, docs in corpora.items():
+        rows = {r["word"]: r for r in unigram_viterbi(docs).collect()}
+
+        wc = Counter()
+        for (text,) in docs.collect():
+            for w in text.lower().split():
+                if w and len(w) <= 8:
+                    wc[w] += 1
+        pc = Counter()
+        for w, c in wc.items():
+            for j in range(len(w)):
+                for l in range(1, min(4, len(w) - j) + 1):
+                    pc[w[j : j + l]] += c
+        tot = sum(pc.values())
+        s = {p: round(-math.log(c / tot) * 1_000_000) for p, c in pc.items()}
+
+        assert set(rows) == set(wc), corpus
+        tied = 0
+        for w, r in rows.items():
+            assert r["wcount"] == wc[w]
+            cands = [(sum(s[p] for p in seg), seg) for seg in segmentations(w)]
+            want = min(c for c, _ in cands)
+            best = [seg for c, seg in cands if c == want]
+            tied += len(best) > 1
+            # longest final piece first, then the piece before it, ...
+            pick = min(best, key=lambda seg: [-len(p) for p in reversed(seg)])
+            assert r["vit_cost_micro"] == want, (corpus, w, r["vit_cost_micro"], want)
+            pieces = r["seg"].split("|")
+            assert pieces == pick, (corpus, w, pieces, best)
+            assert r["n_pieces"] == len(pieces)
+        if corpus == "tie_heavy":
+            # ababa, babab, abababa, bababab
+            assert tied >= 4, tied
 
 
 def test_kneser_ney_normalizes_exactly(spark, sf_dir):

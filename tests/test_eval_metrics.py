@@ -1,9 +1,9 @@
-"""Axiom gates for the round-11 extra-tier families (edit-distance join,
-nDCG ranking eval, IPW/stratified ATE). Engine parity is adjudicated by
-the DuckDB oracles in tests/test_extra_queries.py; these pin the
-SEMANTICS against independent replays and invariants the oracle form
-cannot express (rearrangement inequality, brute pair-set equality,
-weighted-rollup consistency)."""
+"""Axiom gates for extra-tier families (edit-distance join, facility
+location, rendezvous resharding, Heaps' law, set cover, Soundex blocking,
+the AMS F2 sketch). Engine parity is adjudicated by the DuckDB oracles in
+tests/test_extra_queries.py; these pin the SEMANTICS against independent
+replays and invariants the oracle form cannot express (submodularity,
+brute pair-set equality, merge properties)."""
 
 from __future__ import annotations
 
@@ -46,41 +46,6 @@ def test_edit_distance_join_equals_brute(spark, sf_dir):
     assert all(1 <= d <= 3 for d, _ in got.values())
 
 
-def test_ndcg_rearrangement_inequality(spark, sf_dir):
-    """DCG under the model ranking can never exceed DCG under the ideal
-    (relevance-sorted) ranking — the rearrangement inequality; and
-    ndcg_ppm is in [0, 1e6]."""
-    rows = EXTRA_QUERIES["q_ndcg_ranking"](spark, sf_dir).collect()
-    assert rows, "no users evaluated"
-    for r in rows:
-        assert r["dcg_micro"] <= r["idcg_micro"]
-        if r["ndcg_ppm"] is not None:
-            assert 0 <= r["ndcg_ppm"] <= 1_000_000
-
-
-def test_ipw_overall_is_weighted_stratum_average(spark, sf_dir):
-    """The stratum = -1 row must equal the n-weighted half-up average of
-    the per-stratum snapped effects over both-arm strata, and counts must
-    be internally consistent (n = n_t + n_c, rollup sums the kept
-    strata)."""
-    rows = {**QUERIES, **EXTRA_QUERIES}["q_ipw_ate"](spark, sf_dir).collect()
-    strata = [r for r in rows if r["stratum"] >= 0]
-    overall = [r for r in rows if r["stratum"] == -1]
-    assert len(overall) == 1
-    o = overall[0]
-    kept = [r for r in strata if r["effect_milli"] is not None]
-    assert all(r["n"] == r["n_t"] + r["n_c"] for r in strata)
-    if not kept:
-        # tiny-SF degenerate case (every stratum single-armed): the
-        # rollup row must be all-NULL in both engines, not fabricated
-        assert o["effect_milli"] is None and o["n"] is None
-        return
-    assert o["n"] == sum(r["n"] for r in kept)
-    num = sum(r["n"] * r["effect_milli"] for r in kept)
-    den = sum(r["n"] for r in kept)
-    assert o["effect_milli"] == (2 * num + den) // (2 * den)
-
-
 def test_facility_location_submodularity(spark, sf_dir):
     """Greedy facility-location must exhibit diminishing returns: the
     picked marginal gains are non-increasing across rounds (submodularity
@@ -114,44 +79,6 @@ def test_rendezvous_minimal_disruption(spark, sf_dir):
     assert 60_000 <= hrw["moved_ppm"] <= 170_000, hrw["moved_ppm"]
     assert 830_000 <= mod["moved_ppm"] <= 940_000, mod["moved_ppm"]
     assert mod["n_moved"] > 5 * hrw["n_moved"]
-
-
-def test_sprt_matches_walk_replay(spark, sf_dir):
-    """q_sprt_sequential equals a pure-Python replay of the integer LLR
-    walk (same snapped increments), and the Wald stopping rule holds:
-    |llr| >= A exactly at the decision index and < A strictly before."""
-    import pandas as pd
-
-    from prefect_flow_arc_alto_to_json_spark.plans.clean_queries import (
-        _SPRT_A,
-        _SPRT_F,
-        _SPRT_S,
-    )
-
-    rows = {
-        r["experiment"]: r
-        for r in EXTRA_QUERIES["q_sprt_sequential"](spark, sf_dir).collect()
-    }
-    ev = pd.read_parquet(f"{sf_dir}/events.parquet")[
-        ["event_type", "ts", "event_id", "value"]
-    ].sort_values(["event_type", "ts", "event_id"])
-    for t, grp in ev.groupby("event_type"):
-        incs = [(_SPRT_S if v >= 10 else _SPRT_F) for v in grp["value"]]
-        llr, n_dec, llr_dec = 0, None, None
-        for i, inc in enumerate(incs, 1):
-            llr += inc
-            if n_dec is None and abs(llr) >= _SPRT_A:
-                n_dec, llr_dec = i, llr
-        r = rows[t]
-        assert r["n_total"] == len(incs)
-        assert r["n_at_decision"] == n_dec
-        if n_dec is None:
-            assert r["decision"] == "continue" and r["llr_micro"] == llr
-        else:
-            assert r["llr_micro"] == llr_dec
-            assert r["decision"] == (
-                "accept_h1" if llr_dec >= _SPRT_A else "accept_h0"
-            )
 
 
 def test_heaps_law_sublinear_and_monotone(spark, sf_dir):
@@ -213,126 +140,6 @@ def test_set_cover_matches_greedy_replay(spark, sf_dir):
         covered |= sets[best]
         want.append((k, best, g, len(covered)))
     assert [tuple(r) for r in rows] == want
-
-
-def test_quantile_normalize_aligns_sources(spark, sf_dir):
-    """The defining property: equal-size sources receive EXACTLY the
-    same normalized multiset; within a source the mapping is monotone
-    (higher src_rank -> qn_value never decreases); target ranks stay in
-    [1, N]."""
-    from collections import Counter
-
-    rows = EXTRA_QUERIES["q_quantile_normalize"](spark, sf_dir).collect()
-    n_total = len(rows)
-    by_src: dict = {}
-    for r in rows:
-        by_src.setdefault(r["source"], []).append(r)
-        assert 1 <= r["target_rank"] <= n_total
-    sizes = {s: len(v) for s, v in by_src.items()}
-    multisets = {
-        s: Counter(r["qn_value"] for r in v) for s, v in by_src.items()
-    }
-    ref_by_size: dict = {}
-    for s, n in sizes.items():
-        if n in ref_by_size:
-            assert multisets[s] == multisets[ref_by_size[n]], (
-                s,
-                ref_by_size[n],
-            )
-        else:
-            ref_by_size[n] = s
-    for v in by_src.values():
-        v.sort(key=lambda r: r["src_rank"])
-        qs = [r["qn_value"] for r in v]
-        assert all(a <= b for a, b in zip(qs, qs[1:]))
-
-
-def test_fairness_audit_consistency(spark, sf_dir):
-    """Per-group counts must roll up exactly to the ALL row; every rate
-    is the half-up ppm of its own counts; rates live in [0, 1e6]."""
-    rows = {r["grp"]: r for r in EXTRA_QUERIES["q_fairness_audit"](spark, sf_dir).collect()}
-    alln = rows.pop("ALL")
-    assert alln["n"] == sum(r["n"] for r in rows.values())
-    assert alln["n_label"] == sum(r["n_label"] for r in rows.values())
-    assert alln["n_pred"] == sum(r["n_pred"] for r in rows.values())
-    for r in list(rows.values()) + [alln]:
-        assert r["pred_rate_ppm"] == (2 * r["n_pred"] * 1_000_000 + r["n"]) // (2 * r["n"])
-        for c in ("pred_rate_ppm", "tpr_ppm", "fpr_ppm"):
-            if r[c] is not None:
-                assert 0 <= r[c] <= 1_000_000
-        if r["n_label"] == 0:
-            assert r["tpr_ppm"] is None
-        if r["n"] - r["n_label"] == 0:
-            assert r["fpr_ppm"] is None
-
-
-def test_fdr_bh_rejects_exactly_planted_sources(spark, sf_dir):
-    """BH fires on the two planted-alternative sources and controls the
-    false discovery rate on the true nulls (design: md5 coins, share
-    ~0.1 / ~0.9 vs fair-coin nulls — see plans/evalstat_queries.py)."""
-    from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES
-    from prefect_flow_arc_alto_to_json_spark.plans.evalstat_queries import (
-        _FDR_HI_SRC,
-        _FDR_LO_SRC,
-    )
-
-    rows = EXTRA_QUERIES["q_fdr_bh"](spark, sf_dir).collect()
-    rejected = {r["source"] for r in rows if r["reject"] == 1}
-    assert {_FDR_LO_SRC, _FDR_HI_SRC} <= rejected, rejected
-    # FDR control: at alpha=0.1 with 18 true nulls, more than 2 false
-    # discoveries would be far outside the guarantee on this fixed data
-    assert len(rejected - {_FDR_LO_SRC, _FDR_HI_SRC}) <= 2, rejected
-
-
-def test_bleu_eval_orderings(spark, sf_dir):
-    """The perturbation (dropped tokens) must show up exactly where BLEU
-    theory says: candidate shorter than reference (BP < 1e6), bigram
-    precision below unigram precision, BLEU below both."""
-    from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES
-
-    for r in EXTRA_QUERIES["q_bleu_eval"](spark, sf_dir).collect():
-        assert 0 < r["cand_len"] < r["ref_len"]
-        assert 0 < r["bp_micro"] < 1_000_000
-        p1 = r["p1_num"] / r["p1_den"]
-        p2 = r["p2_num"] / r["p2_den"]
-        assert 0 < p2 < p1 < 1
-        assert 0 < r["bleu_ppm"] < 1_000_000
-        # bleu = bp * sqrt(p1*p2) within snapping tolerance
-        import math
-
-        want = r["bp_micro"] / 1e6 * math.sqrt(p1 * p2) * 1e6
-        assert abs(r["bleu_ppm"] - want) < 3
-
-
-def test_kendall_tau_bounds_and_pairs(spark, sf_dir):
-    """tau-b internals: 21 pairs per 7-day profile, C+D+ties consistent,
-    |tau_num| bounded by the tie-corrected margin product."""
-    from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES
-
-    rows = EXTRA_QUERIES["q_kendall_tau"](spark, sf_dir).collect()
-    assert rows
-    import math
-
-    for r in rows:
-        assert r["n0"] == 21  # C(7,2) weekday pairs
-        assert r["c"] + r["d"] <= r["n0"]
-        assert abs(r["tau_num"]) <= math.sqrt(r["tau_den_sq"]) + 1e-9
-        assert r["tau_den_sq"] == (r["n0"] - r["t1"]) * (r["n0"] - r["t2"])
-
-
-def test_diff_in_diff_identity(spark, sf_dir):
-    """did_micro is exactly the 2x2 double difference of the emitted
-    cell means (pure integer identity), and every cell is populated."""
-    from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES
-
-    rows = EXTRA_QUERIES["q_diff_in_diff"](spark, sf_dir).collect()
-    assert rows
-    for r in rows:
-        for c in ("mt_pre", "mt_post", "mc_pre", "mc_post"):
-            assert r[c] is not None and r[c] > 0
-        assert r["did_micro"] == (r["mt_post"] - r["mt_pre"]) - (
-            r["mc_post"] - r["mc_pre"]
-        )
 
 
 def test_soundex_blocking_matches_python_replay(spark, sf_dir):
@@ -421,242 +228,3 @@ def test_ams_f2_merge_property(spark, sf_dir):
     assert halves[0] + halves[1] == full
 
 
-def test_regression_discontinuity_recovers_planted_jump(spark, sf_dir):
-    """The RD estimate must recover the planted +1 (mean of the md5 coin
-    in {0,1,2}) at the cutoff within sampling noise, and each side must
-    have a populated bandwidth sample."""
-    from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES
-
-    r = EXTRA_QUERIES["q_regression_discontinuity"](spark, sf_dir).collect()
-    assert len(r) == 1
-    row = r[0]
-    assert row["n_l"] > 20 and row["n_r"] > 20
-    # measured across the three SFs: 1.30 / 2.00 / 0.70 (x1e6) around the
-    # planted 1e6 — generous band, but sign and order of magnitude pinned
-    assert 200_000 < row["rd_micro"] < 2_600_000, row["rd_micro"]
-
-
-def test_successive_halving_schedule_and_planted_winners(spark, sf_dir):
-    """The elimination trajectory follows the schedule exactly (20/10/
-    5/3 arms in rounds 1-4, keeping 10/5/3/2), budgets are respected,
-    and the final survivors come from the top planted indices."""
-    from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES
-    from prefect_flow_arc_alto_to_json_spark.plans.evalstat_queries import (
-        _SH_SCHEDULE,
-    )
-
-    rows = EXTRA_QUERIES["q_successive_halving"](spark, sf_dir).collect()
-    by_round: dict = {}
-    for r in rows:
-        by_round.setdefault(r["round"], []).append(r)
-    alive = 20
-    for rnd, (b, m) in enumerate(_SH_SCHEDULE, 1):
-        got = by_round[rnd]
-        assert len(got) == alive, (rnd, len(got), alive)
-        assert all(r["budget"] == b for r in got)
-        assert all(r["n_used"] <= b for r in got)
-        kept = [r for r in got if r["kept"] == 1]
-        assert len(kept) == m
-        # survivors are exactly the top-m by (mean DESC, source)
-        order = sorted(got, key=lambda r: (-r["mean_micro"], r["source"]))
-        assert {r["source"] for r in order[:m]} == {r["source"] for r in kept}
-        alive = m
-    final = {r["source"] for r in by_round[4] if r["kept"] == 1}
-    # planted means rise with the source index: both survivors must come
-    # from the top-5 indices
-    assert all(int(s[3:]) >= 15 for s in final), final
-
-
-def test_team_draft_interleave_matches_python_replay(spark, sf_dir):
-    """Per-user credits equal an independent pure-Python team-draft
-    replay (ranks, coin, alternating picks with skip-already-picked,
-    post-period credit assignment)."""
-    import pandas as pd
-
-    from prefect_flow_arc_alto_to_json_spark.functions.scalar import (
-        stable_hash_p31,
-    )
-    from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES
-    from prefect_flow_arc_alto_to_json_spark.plans.evalstat_queries import (
-        _TD_CUTOFF,
-        _TD_PICKS,
-        _TD_SALT,
-    )
-    from pyspark.sql import functions as F
-
-    got = {
-        r["user_id"]: (r["first_coin"], r["credit_a"], r["credit_b"], r["winner"])
-        for r in EXTRA_QUERIES["q_team_draft_interleave"](spark, sf_dir).collect()
-    }
-
-    ev = pd.read_parquet(f"{sf_dir}/events.parquet")
-    cut = pd.Timestamp(_TD_CUTOFF)
-    ev["cents"] = (ev["value"] * 100).round().astype("int64")
-    pre = ev[ev["ts"] < cut]
-    post = ev[ev["ts"] >= cut]
-    pre_cents = pre.groupby(["user_id", "event_type"])["cents"].sum()
-    last_pre = pre.groupby(["user_id", "event_type"])["ts"].max()
-    post_cnt = post.groupby(["user_id", "event_type"]).size()
-    users = sorted(ev["user_id"].unique())
-    # md5 coin via the Spark helper itself (1-row probe per distinct user
-    # would be slow — batch through a DataFrame)
-    cdf = spark.createDataFrame([(int(u),) for u in users], "user_id long")
-    coins = {
-        r["user_id"]: r["c"]
-        for r in cdf.select(
-            "user_id",
-            (
-                stable_hash_p31(
-                    F.concat(F.lit(_TD_SALT), F.col("user_id").cast("string"))
-                )
-                % 2
-            ).alias("c"),
-        ).collect()
-    }
-    for u in users:
-        items = sorted(
-            {k[1] for k in pre_cents.index if k[0] == u}
-            | {k[1] for k in post_cnt.index if k[0] == u}
-        )
-        ra = sorted(items, key=lambda t: (-pre_cents.get((u, t), 0), t))
-        rb = sorted(
-            items,
-            key=lambda t: (
-                -(last_pre.get((u, t), pd.Timestamp(0)).value),
-                t,
-            ),
-        )
-        coin = coins[u]
-        picked: list = []
-        teams: dict = {}
-        for s in range(_TD_PICKS):
-            team_a = (coin + s) % 2 == 0
-            ranking = ra if team_a else rb
-            nxt = next(t for t in ranking if t not in picked)
-            picked.append(nxt)
-            teams[nxt] = "A" if team_a else "B"
-        ca = sum(post_cnt.get((u, t), 0) for t, tm in teams.items() if tm == "A")
-        cb = sum(post_cnt.get((u, t), 0) for t, tm in teams.items() if tm == "B")
-        w = "A" if ca > cb else ("B" if cb > ca else "T")
-        assert got[u] == (coin, ca, cb, w), (u, got[u], (coin, ca, cb, w))
-
-
-def test_doubly_robust_ate_matches_python_replay(spark, sf_dir):
-    """Full pure-Python replay of the AIPW pipeline (user grain, 5
-    propensity strata, 2-bin coarse outcome model, signed half-up milli
-    snapping, combine-after-snap overall row)."""
-    import pandas as pd
-
-    from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES
-    from prefect_flow_arc_alto_to_json_spark.plans.evalstat_queries import (
-        _DR_WK1,
-    )
-
-    got = {
-        r["stratum"]: (
-            r["n"], r["n_t"], r["n_c"], r["mu1_milli"], r["mu0_milli"],
-            r["aipw_milli"],
-        )
-        for r in EXTRA_QUERIES["q_doubly_robust_ate"](spark, sf_dir).collect()
-    }
-
-    def half_up(num: int, den: int) -> int:
-        if num >= 0:
-            return (2 * num + den) // (2 * den)
-        return -((2 * -num + den) // (2 * den))
-
-    ev = pd.read_parquet(f"{sf_dir}/events.parquet")
-    wk1 = pd.Timestamp(_DR_WK1)
-    ev["cents"] = (ev["value"] * 100).round().astype("int64")
-    u = ev.groupby("user_id").apply(
-        lambda g: pd.Series(
-            {
-                "treated": int(
-                    (
-                        (g["event_type"] == "signup") & (g["ts"] < wk1)
-                    ).any()
-                ),
-                "pre_n": int((g["ts"] < wk1).sum()),
-                "y": int(
-                    g.loc[
-                        (g["event_type"] == "purchase") & (g["ts"] >= wk1),
-                        "cents",
-                    ].sum()
-                ),
-            }
-        ),
-        include_groups=False,
-    ).reset_index()
-    u["stratum"] = (u["pre_n"] // 5).clip(upper=4)
-    u["coarse"] = (u["stratum"] > 2).astype(int)
-    cb = {}
-    for c, g in u.groupby("coarse"):
-        t, ctl = g[g["treated"] == 1], g[g["treated"] == 0]
-        mu1 = half_up(int(t["y"].sum()) * 1000, len(t)) if len(t) else None
-        mu0 = half_up(int(ctl["y"].sum()) * 1000, len(ctl)) if len(ctl) else None
-        cb[c] = (mu1, mu0)
-    want = {}
-    tot_n = tot_t = tot_c = 0
-    wsum = wn = 0
-    for st, g in u.groupby("stratum"):
-        n, n_t = len(g), int(g["treated"].sum())
-        n_c = n - n_t
-        mu1, mu0 = cb[int(st > 2)]
-        sum_t = int(g.loc[g["treated"] == 1, "y"].sum())
-        sum_c = int(g.loc[g["treated"] == 0, "y"].sum())
-        if n_t > 0 and n_c > 0 and mu1 is not None and mu0 is not None:
-            a_num = (
-                (mu1 - mu0) * n_t * n_c
-                + (sum_t * 1000 - n_t * mu1) * n_c
-                - (sum_c * 1000 - n_c * mu0) * n_t
-            )
-            aipw = half_up(a_num, n_t * n_c)
-            wsum += n * aipw
-            wn += n
-        else:
-            aipw = None
-        want[st] = (n, n_t, n_c, mu1, mu0, aipw)
-        tot_n += n
-        tot_t += n_t
-        tot_c += n_c
-    want[-1] = (
-        tot_n, tot_t, tot_c, None, None,
-        half_up(wsum, wn) if wn > 0 else None,
-    )
-    assert got == want, {k: (got.get(k), want.get(k)) for k in set(got) | set(want)}
-
-
-def test_jenks_breaks_is_globally_optimal(spark, sf_dir):
-    """The emitted 2-break classing minimizes the snapped within-class
-    SSD over ALL O(m^2) break pairs (exhaustive pure-Python check on the
-    distinct-value spine)."""
-    import pandas as pd
-
-    from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES
-
-    r = EXTRA_QUERIES["q_jenks_breaks"](spark, sf_dir).collect()[0]
-
-    xs = pd.read_parquet(f"{sf_dir}/documents.parquet")["n_chars"]
-    hist = xs.value_counts().sort_index()
-    vals = list(hist.index)
-    w = list(hist.values)
-
-    def half_up(num: int, den: int) -> int:
-        return (2 * num + den) // (2 * den)
-
-    def seg(i: int, j: int) -> int:  # cost_milli of vals[i..j] inclusive
-        ww = sum(w[i : j + 1])
-        s1 = sum(wi * v for wi, v in zip(w[i : j + 1], vals[i : j + 1]))
-        s2 = sum(wi * v * v for wi, v in zip(w[i : j + 1], vals[i : j + 1]))
-        return half_up((s2 * ww - s1 * s1) * 1000, ww)
-
-    m = len(vals)
-    best = None
-    for i in range(m - 2):
-        c1 = seg(0, i)
-        for j in range(i + 1, m - 1):
-            c = c1 + seg(i + 1, j) + seg(j + 1, m - 1)
-            key = (c, vals[j], vals[i])
-            if best is None or key < best:
-                best = key
-    assert (r["total_cost_milli"], r["break2"], r["break1"]) == best

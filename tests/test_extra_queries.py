@@ -82,6 +82,29 @@ def test_readme_query_count_matches_registry():
     assert total == graded + extra
 
 
+def test_benchmark_queries_stay_registered():
+    """The benchmark's registry_doc workload (perfbench/workloads.py)
+    runs a fixed list of registered queries and checks each against its
+    oracle: a registry deletion must not silently break it."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(__file__), "..", "perfbench")
+    )
+    from workloads import REGISTRY_QUERIES
+
+    assert REGISTRY_QUERIES
+    oracles = {**ORACLES, **EXTRA_ORACLES}
+    missing = [
+        n for n in REGISTRY_QUERIES
+        if n not in QUERIES and n not in EXTRA_QUERIES
+    ]
+    assert not missing, f"benchmark queries no longer registered: {missing}"
+    no_oracle = [n for n in REGISTRY_QUERIES if n not in oracles]
+    assert not no_oracle, f"benchmark queries without an oracle: {no_oracle}"
+
+
 @pytest.mark.parametrize("name", sorted(EXTRA_ORACLES))
 def test_extra_query_matches_oracle(name, spark, sf_dir, con):
     df = EXTRA_QUERIES[name](spark, sf_dir)

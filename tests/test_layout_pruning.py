@@ -1,50 +1,12 @@
-"""At-rest layout + runtime pruning tests: partition-directory pruning
-(sinks/partitioned.py) and runtime bloom-filter join pruning — the two
-scan-reduction mechanisms that matter most at 100 TB beyond row-group
-pushdown (already pinned in test_plan_shapes)."""
+"""At-rest layout + runtime pruning tests: runtime bloom-filter join
+pruning and Z-order/Hilbert file layouts (sinks/zorder.py) — scan-reduction
+mechanisms beyond row-group pushdown (already pinned in test_plan_shapes)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from prefect_flow_arc_alto_to_json_spark.sinks.partitioned import (
-    read_pruned,
-    write_partitioned,
-)
 from prefect_flow_arc_alto_to_json_spark.sources import load_table
-
-
-@pytest.fixture(scope="module")
-def part_path(spark, sf_dir, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("part") / "orders_by_year")
-    orders = load_table(spark, sf_dir, "orders").withColumn(
-        "o_year", F.year("o_orderdate")
-    )
-    write_partitioned(orders, path, ["o_year"])
-    return path
-
-
-def test_partition_filter_prunes_directories(spark, sf_dir, part_path):
-    df = read_pruned(spark, part_path).where(F.col("o_year") == 1997)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # the year predicate must be a PARTITION filter (directory pruning),
-    # not a row-group data filter
-    pf = plan.split("PartitionFilters: ")[1].split("]")[0]
-    assert "o_year" in pf, plan
-    assert "PushedFilters: []" in plan, plan
-    want = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.year("o_orderdate") == 1997)
-        .count()
-    )
-    assert df.count() == want and want > 0
-
-
-def test_partition_cardinality_guard(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders")
-    with pytest.raises(ValueError, match="max_partitions"):
-        write_partitioned(orders, "/tmp/never-written", ["o_orderkey"], max_partitions=100)
 
 
 def test_runtime_bloom_filter_prunes_join_probe(spark, sf_dir):
@@ -87,20 +49,6 @@ def test_runtime_bloom_filter_prunes_join_probe(spark, sf_dir):
     )
     want = li.join(orders, li.l_orderkey == orders.o_orderkey).count()
     assert n == want and n > 0
-
-
-def test_partition_guard_near_cap_band_is_exact(spark, tmp_path):
-    """Round-5 ADVICE: writes in the HLL ambiguity band (±3 sigma of the
-    cap) must be decided by an exact recount — 98/100 distinct passes
-    (previously falsely rejected), 101/100 rejects."""
-    ok = spark.range(980).selectExpr("id", "id % 98 as part")
-    path = str(tmp_path / "near_cap")
-    write_partitioned(ok, path, ["part"], max_partitions=100)  # must not raise
-    assert spark.read.parquet(path).count() == 980
-
-    over = spark.range(1010).selectExpr("id", "id % 101 as part")
-    with pytest.raises(ValueError, match="max_partitions"):
-        write_partitioned(over, "/tmp/never-written-2", ["part"], max_partitions=100)
 
 
 def test_zorder_layout_localizes_2d_box_filters(spark, sf_dir, tmp_path):
