@@ -72,6 +72,7 @@ SKIP_PREFIX = ("stream_",)
 # column.
 ITERATIVE = {
     "dedup_components",
+    "q_boosted_stumps",
     "text_textrank_keywords",
     "q_set_cover_greedy",
     "sim_facility_location",
@@ -97,13 +98,27 @@ ITERATIVE = {
 GLOBAL_WINDOW_ALLOWED: dict[str, str] = {
     # --- distinct-VALUE histogram relations (bounded by the score/value
     # domain, constant in corpus size — the roc_auc_histogram device)
+    "q_roc_auc": "window over distinct n_chars scores (value-domain-bounded)",
     "text_quality_auc": "same roc_auc_histogram device over distinct quality scores",
+    "q_spearman_correlation": "midrank windows over distinct per-user x/y values",
+    "q_ks_two_sample": "prefix sums over distinct n_chars values",
+    "q_mondrian_anon": "median windows over the distinct-value spine per cell (level-0 cell=0 folds to a constant key; spine is value-domain-bounded)",
+    "q_mann_whitney": "rank relation over distinct spend values, not users",
     "q_skyline_pareto": "running max over the distinct-price spine (price-domain-bounded; two-level escalation documented)",
     # --- fixed-bin / constant-size relations
+    "q_psi_drift": "PSI math on the 10-bin relation",
+    "q_t_closeness": "cumulative window over the 10-bucket spine per class",
+    "q_bootstrap_ci": "rank over the 20 bootstrap replicate means",
+    "q_decision_stump": "error curve over $20k-bin candidate thresholds",
+    "q_boosted_stumps": "same binned-histogram split finding per round",
+    "q_conformal_interval": "kth_smallest_binned: prefix over the bounded bin histogram",
     "q_hilbert_vs_zorder": "lag over occupied grid cells (<= 2^(2*bits))",
     "q_event_trigrams": "top-20 over the |event types|^3 <= 125 cell relation",
     "q_ams_f2_moment": "median rank over the 5 AMS estimator rows",
     # --- calendar / day-grain spines (bounded by the time range)
+    "q_daily_backlog": "cumulative window over the date spine",
+    "q_autocorr_lag1": "lag window over the date spine",
+    "q_ewma_daily": "14 lags over the date spine",
     "q_cumulative_distinct_users": "running sum over first-seen day rows",
     # --- vocabulary-bounded relations
     "text_zipf_slope": "rank over token types (language-bounded vocabulary)",

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import pandas as pd
 
+from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 from pyspark.sql.types import (
     DoubleType,
@@ -64,6 +65,73 @@ def exact_quantile_p90(v: pd.Series) -> float:
     """Exact p90 per group (pandas GROUPED_AGG — an Arrow-batched UDAF).
     Linear interpolation, matching ``numpy.quantile`` defaults."""
     return float(v.quantile(0.9))
+
+
+def cogroup_merge_asof(
+    left,
+    right,
+    key: str,
+    left_ts: str = "ts",
+    right_ts: str = "ts",
+    suffix: str = "_asof",
+):
+    """Backward-inclusive as-of join via the COGROUPED map surface:
+    ``left.groupBy(key).cogroup(right.groupBy(key)).applyInPandas`` with a
+    per-key ``pandas.merge_asof`` — the two-sided Arrow escape hatch
+    (§2.10), semantically identical to ``operators.joins.asof_join`` (the
+    pure-DataFrame union+window form) and sharing its oracle.
+
+    Scale: cogroup shuffles BOTH sides once on the key and hands each key's
+    two frames to one Arrow batch — per-key work is bounded by the key's
+    own rows. Use the window form when the value columns are few (it stays
+    JVM-side); use this form when the per-key merge logic outgrows SQL.
+    """
+    value_cols = [c for c in right.columns if c not in (key, right_ts)]
+    out_schema = StructType(
+        list(left.schema.fields)
+        + [
+            StructField(f"{c}{suffix}", right.schema[c].dataType)
+            for c in value_cols
+        ]
+    )
+    out_cols = [f.name for f in out_schema.fields]
+
+    # Alias the right side to fresh names BEFORE cogrouping: when both
+    # sides descend from the same source DataFrame, their columns share
+    # attribute ids and the CoGroup node dedupes the right side's copies —
+    # the Python function would receive a right frame silently missing its
+    # ts/key columns. Fresh aliases guarantee disjoint attributes.
+    rmap = {c: f"__r_{c}" for c in right.columns}
+    right_fresh = right.select(
+        *[F.col(c).alias(a) for c, a in rmap.items()]
+    )
+
+    def merge(lf: pd.DataFrame, rf: pd.DataFrame) -> pd.DataFrame:
+        if lf.empty:
+            return pd.DataFrame(columns=out_cols)
+        lf = lf.sort_values(left_ts, kind="mergesort")
+        if rf.empty:
+            out = lf.copy()
+            for c in value_cols:
+                out[f"{c}{suffix}"] = None
+            return out[out_cols]
+        rf = rf[[rmap[right_ts]] + [rmap[c] for c in value_cols]].rename(
+            columns={
+                rmap[right_ts]: "__rts",
+                **{rmap[c]: f"{c}{suffix}" for c in value_cols},
+            }
+        )
+        rf = rf.sort_values("__rts", kind="mergesort")
+        merged = pd.merge_asof(
+            lf, rf, left_on=left_ts, right_on="__rts", direction="backward"
+        )
+        return merged[out_cols]
+
+    return (
+        left.groupBy(key)
+        .cogroup(right_fresh.groupBy(rmap[key]))
+        .applyInPandas(merge, schema=out_schema)
+    )
 
 
 def vector_stats_arrow(df, vec_col: str = "embedding", id_col: str = "vec_id"):

@@ -311,7 +311,7 @@ def unigram_viterbi(
         .select("word", "e.j", "e.i", "e.piece")
         .join(F.broadcast(scored), "piece")
     )
-    # LATTICE-AT-ONCE DP (round-14, guide §7.3/§2.4):
+    # LATTICE-AT-ONCE DP (round-14, guide §7.3/§2.4 — the q_dtw device):
     # the previous form ran max_word_len per-level rounds, each a
     # segs⋈ball join + per-word window + eager localCheckpoint — ~40
     # driver jobs and max_word_len vocabulary shuffles for an 8-char DP.

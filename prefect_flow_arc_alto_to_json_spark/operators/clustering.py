@@ -777,3 +777,164 @@ def pca_project_micro(
         .agg(F.sum(F.col("x") * F.col("loading_micro")).alias("proj"))
         .select(F.col("vid").alias(id_col), "proj")
     )
+
+
+# ---------------------------------------------------------------------------
+# Logistic regression by distributed gradient descent
+# ---------------------------------------------------------------------------
+
+LOGREG_LR = 4.0
+LOGREG_DIMS = 4
+
+
+def _z_expr(ws: list, xs: list):
+    """Left-associated ((w0 + w1*x1) + w2*x2) + ... — the SAME textual
+    order as the oracle, so the double sum rounds identically."""
+    z = ws[0]
+    for w, x in zip(ws[1:], xs):
+        z = z + w * x
+    return z / F.lit(1_000_000.0)
+
+
+def logreg_gd(emb: DataFrame, dims: int = LOGREG_DIMS) -> DataFrame:
+    """Binary logistic regression (y = label mod 2 on the first ``dims``
+    embedding components + bias) fit by TWO unrolled synchronous
+    gradient-descent steps from w=0 — the iterative-ML representative
+    beside the closed-form OLS fit (q_ols_regression): when the loss has
+    no normal equations, the distributed shape is per-row gradient
+    contributions -> ONE map-side-combining aggregate per step -> a
+    1-row weight relation broadcast into the next step. The whole fit +
+    final training accuracy is ONE lazy plan: no driver-side state, no
+    collect between iterations.
+
+    Determinism (the pagerank device, applied to SGD): step 1 from w=0
+    has sigmoid(0) = 1/2 EXACTLY, so residuals are exact integers; each
+    per-row gradient term ``round(resid_micro * x_j * 1000)`` snaps to
+    nano BEFORE the order-free long sum; weight updates divide once in
+    double and snap to micro. Step 2's sigmoid is the one genuinely
+    float op: z is a fixed-order 5-term double sum of exact values, and
+    ``round(1e6 * sigmoid(z))`` straddles a .5 boundary only on a
+    measure-zero set (the ln/exp precedent of the LM scores).
+
+    At 100 TB: each step is one scan + one tiny exchange (d+1 longs per
+    partition); d more dims or k more steps add columns/stages, never
+    shuffled rows. Sub-sampled minibatch GD drops in by hash-filtering
+    the scan per step (text_train_val_split's device).
+    """
+    xs = [
+        F.col("embedding")[j].cast("double").alias(f"x{j + 1}")
+        for j in range(dims)
+    ]
+    r = emb.select((F.col("label") % 2).cast("long").alias("y"), *xs)
+    xcols = [F.col(f"x{j + 1}") for j in range(dims)]
+    n = r.agg(F.count(F.lit(1)).alias("n"))
+
+    def grads(rel, resid, tag: str):
+        aggs = [F.sum((resid * 1000).cast("long")).alias(f"{tag}0")]
+        aggs += [
+            F.sum(F.round(resid * x * 1000, 0).cast("long")).alias(
+                f"{tag}{j + 1}"
+            )
+            for j, x in enumerate(xcols)
+        ]
+        return rel.agg(*aggs)
+
+    def step(prev_w: list, grel, gtag: str, wtag: str):
+        cols = []
+        for j in range(dims + 1):
+            delta = F.round(
+                F.lit(LOGREG_LR)
+                * F.col(f"{gtag}{j}")
+                / (F.col("n") * F.lit(1000.0)),
+                0,
+            ).cast("long")
+            base = prev_w[j] if prev_w else F.lit(0).cast("long")
+            cols.append((base - delta).alias(f"{wtag}{j}"))
+        return grel.crossJoin(F.broadcast(n)).select(*cols)
+
+    g1 = grads(r, F.lit(500000) - F.col("y") * 1000000, "g")
+    w1 = step([], g1, "g", "a")
+    a = [F.col(f"a{j}") for j in range(dims + 1)]
+    s2 = r.crossJoin(F.broadcast(w1)).withColumn(
+        "p",
+        F.round(
+            F.lit(1_000_000.0) / (F.lit(1) + F.exp(-_z_expr(a, xcols))), 0
+        ).cast("long"),
+    )
+    g2 = grads(s2, F.col("p") - F.col("y") * 1000000, "h")
+    w2 = step(a, g2.crossJoin(F.broadcast(w1)), "h", "b")
+    b = [F.col(f"b{j}") for j in range(dims + 1)]
+    acc = (
+        r.crossJoin(F.broadcast(w2))
+        .agg(
+            F.sum(
+                F.when(
+                    (_z_expr(b, xcols) >= 0) == (F.col("y") == 1), 1
+                ).otherwise(0)
+            )
+            .cast("long")
+            .alias("correct")
+        )
+    )
+    out = n.crossJoin(w2).crossJoin(acc)
+    return out.select(
+        "n",
+        *[F.col(f"b{j}").alias(f"b{j}_micro") for j in range(dims + 1)],
+        "correct",
+    )
+
+
+def logreg_oracle_sql(dims: int = LOGREG_DIMS) -> str:
+    """DuckDB replay of :func:`logreg_gd` — identical snapping, identical
+    operand order in every float expression."""
+    xs = ", ".join(
+        f"CAST(embedding[{j + 1}] AS DOUBLE) AS x{j + 1}" for j in range(dims)
+    )
+    z_a = "a0"
+    z_b = "b0"
+    for j in range(dims):
+        z_a += f" + a{j + 1} * x{j + 1}"
+        z_b += f" + b{j + 1} * x{j + 1}"
+    g1 = "CAST(SUM((500000 - y * 1000000) * 1000) AS BIGINT) AS g0, " + ", ".join(
+        f"CAST(SUM(CAST(ROUND((500000 - y * 1000000) * x{j + 1} * 1000)"
+        f" AS BIGINT)) AS BIGINT) AS g{j + 1}"
+        for j in range(dims)
+    )
+    w1 = ", ".join(
+        f"CAST(0 - ROUND({LOGREG_LR} * g{j} / (n * 1000.0)) AS BIGINT) AS a{j}"
+        for j in range(dims + 1)
+    )
+    g2 = "CAST(SUM((p - y * 1000000) * 1000) AS BIGINT) AS h0, " + ", ".join(
+        f"CAST(SUM(CAST(ROUND((p - y * 1000000) * x{j + 1} * 1000)"
+        f" AS BIGINT)) AS BIGINT) AS h{j + 1}"
+        for j in range(dims)
+    )
+    w2 = ", ".join(
+        f"CAST(a{j} - ROUND({LOGREG_LR} * h{j} / (n * 1000.0)) AS BIGINT)"
+        f" AS b{j}"
+        for j in range(dims + 1)
+    )
+    outw = ", ".join(f"w2.b{j} AS b{j}_micro" for j in range(dims + 1))
+    return f"""
+    WITH r AS (
+      SELECT CAST(label % 2 AS BIGINT) AS y, {xs} FROM embeddings
+    ),
+    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM r),
+    g1 AS (SELECT {g1} FROM r),
+    w1 AS (SELECT {w1} FROM g1 CROSS JOIN nn),
+    s2 AS (
+      SELECT y, {", ".join(f"x{j + 1}" for j in range(dims))},
+             CAST(ROUND(1000000.0
+                        / (1 + exp(-(({z_a}) / 1000000.0)))) AS BIGINT) AS p
+      FROM r CROSS JOIN w1
+    ),
+    g2 AS (SELECT {g2} FROM s2),
+    w2 AS (SELECT {w2} FROM w1 CROSS JOIN g2 CROSS JOIN nn),
+    acc AS (
+      SELECT CAST(SUM(CASE WHEN ((({z_b}) / 1000000.0) >= 0) = (y = 1)
+                           THEN 1 ELSE 0 END) AS BIGINT) AS correct
+      FROM r CROSS JOIN w2
+    )
+    SELECT nn.n, {outw}, acc.correct
+    FROM nn CROSS JOIN w2 CROSS JOIN acc
+    """

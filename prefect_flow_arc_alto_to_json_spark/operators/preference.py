@@ -9,7 +9,7 @@ likelihood every round.
 Determinism contract: strengths live as NANO integers; every division
 snaps with the half-up FLOOR device ((2*num*scale + den) / (2*den)) —
 per-term for the pair sums, once more for the update — so the recurrence
-replays hash-exact in the DuckDB oracle (the pagerank discipline).
+replays hash-exact in the DuckDB oracle (the pagerank/holt discipline).
 
 Scale: the corpus appears only in the contest-building aggregation the
 caller provides; the MM rounds run on the |items| and |items|^2

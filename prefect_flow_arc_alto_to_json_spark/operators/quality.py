@@ -95,6 +95,62 @@ def observed_rules(
     return out, obs
 
 
+def psi_drift(
+    expected: DataFrame,
+    actual: DataFrame,
+    bin_col: str = "bin",
+    n_bins: int = 10,
+) -> DataFrame:
+    """Population Stability Index between two snapshots of a pre-binned
+    feature — the standard distribution-drift gate between a reference
+    corpus and a new ingest (PSI < 0.1 stable, 0.1-0.25 moderate, > 0.25
+    drifted).
+
+    Inputs carry one integer ``bin_col`` in [0, n_bins); both sides are
+    counted per bin over a dense bin spine (so empty bins participate),
+    proportions are Laplace-smoothed ((n+1)/(N+n_bins) — PSI is undefined
+    on zero bins), and each bin's term ``(p_a - p_e) * ln(p_a / p_e)`` is
+    snapped to integer MICRO-UNITS before the total sums them — the same
+    cross-engine determinism device as textstats.unigram_logprob (ulp-level
+    libm differences cannot survive the snap).
+
+    Returns one row per bin: (bin, n_expected, n_actual, psi_term_micro,
+    psi_total_micro); total = sum of terms via an unpartitioned window over
+    n_bins rows (constant-size — not a scale hazard).
+
+    Scale: each side is one partial-aggregated count per bin (≤ n_bins
+    rows shuffle per side, whatever the corpus size); the join/window run
+    on n_bins rows. The 100 TB cost is the two scans — everything after is
+    constant.
+    """
+    spark = expected.sparkSession
+    spine = spark.range(n_bins).select(F.col("id").alias("bin"))
+
+    def counts(df: DataFrame, out: str) -> DataFrame:
+        return df.groupBy(F.col(bin_col).alias("bin")).agg(
+            F.count(F.lit(1)).alias(out)
+        )
+
+    bins = (
+        spine.join(F.broadcast(counts(expected, "n_expected")), "bin", "left")
+        .join(F.broadcast(counts(actual, "n_actual")), "bin", "left")
+        .na.fill(0, ["n_expected", "n_actual"])
+    )
+    ne = F.sum("n_expected").over(Window.partitionBy())
+    na = F.sum("n_actual").over(Window.partitionBy())
+    pe = (F.col("n_expected") + 1).cast("double") / (ne + n_bins).cast("double")
+    pa = (F.col("n_actual") + 1).cast("double") / (na + n_bins).cast("double")
+    term = F.round((pa - pe) * F.log(pa / pe) * 1000000.0, 0).cast("long")
+    with_terms = bins.select(
+        "bin", "n_expected", "n_actual", term.alias("psi_term_micro")
+    )
+    return with_terms.withColumn(
+        "psi_total_micro",
+        F.sum("psi_term_micro").over(Window.partitionBy()).cast("long"),
+    )
+
+
+
 def roc_auc_histogram(
     df: DataFrame, score_col: str, label_col: str
 ) -> DataFrame:
@@ -122,8 +178,8 @@ def roc_auc_histogram(
         F.count(F.lit(1)).alias("c"), F.sum("y").alias("p")
     )
     w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, -1)
-    # the window relation is the score distribution (aggregate-sized) —
-    # NOT the corpus
+    # the window relation is the score distribution (aggregate-sized, like
+    # psi_drift's 10 bins) — NOT the corpus
     ranked = g.withColumn("cum", F.coalesce(F.sum("c").over(w), F.lit(0)))
     totals = ranked.agg(
         F.sum(F.col("p") * (2 * F.col("cum") + F.col("c") + 1)).alias("s2"),
@@ -141,6 +197,54 @@ def roc_auc_histogram(
         )
         .cast("long")
         .alias("auc_ppm"),
+    )
+
+
+def roc_auc_by_group(
+    df: DataFrame, score_col: str, label_col: str, group_col: str
+) -> DataFrame:
+    """Per-slice ROC-AUC — :func:`roc_auc_histogram` generalized to one
+    AUC row per ``group_col`` value (per-language / per-domain model
+    evaluation, the form every corpus-quality loop actually reports).
+    Same histogram formulation and integer tie-exact rank-sum, with the
+    prefix-sum window partitioned BY GROUP over each group's score
+    distribution. Groups with only one class (n_pos or n_neg = 0) have
+    undefined AUC and are emitted with auc_ppm NULL rather than dropped.
+    Returns (group, n_pos, n_neg, auc_ppm).
+    """
+    y = F.col(label_col).cast("int")
+    g = (
+        df.select(
+            F.col(group_col).alias("grp"), F.col(score_col).alias("s"), y.alias("y")
+        )
+        .groupBy("grp", "s")
+        .agg(F.count(F.lit(1)).alias("c"), F.sum("y").alias("p"))
+    )
+    w = (
+        Window.partitionBy("grp")
+        .orderBy("s")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    ranked = g.withColumn("cum", F.coalesce(F.sum("c").over(w), F.lit(0)))
+    totals = ranked.groupBy("grp").agg(
+        F.sum(F.col("p") * (2 * F.col("cum") + F.col("c") + 1)).alias("s2"),
+        F.sum("p").alias("n_pos"),
+        F.sum(F.col("c") - F.col("p")).alias("n_neg"),
+    )
+    defined = (F.col("n_pos") > 0) & (F.col("n_neg") > 0)
+    return totals.select(
+        F.col("grp").alias("group"),
+        F.col("n_pos").cast("long").alias("n_pos"),
+        F.col("n_neg").cast("long").alias("n_neg"),
+        F.when(
+            defined,
+            F.round(
+                (F.col("s2") - F.col("n_pos") * (F.col("n_pos") + 1))
+                * 1000000.0
+                / (2.0 * F.col("n_pos") * F.col("n_neg")),
+                0,
+            ).cast("long"),
+        ).alias("auc_ppm"),
     )
 
 
@@ -251,3 +355,122 @@ def mad_outliers(
     )
 
 
+def isotonic_fit(bins: DataFrame, *, mul: int = 1_000_000) -> DataFrame:
+    """Isotonic (PAVA) regression over a BOUNDED ordered bin relation —
+    the calibration step that turns a reliability table into a monotone
+    calibrated score map (the classic post-hoc classifier calibrator).
+
+    ``bins`` carries (bin long, n long, pos long), at most a few dozen
+    rows: the output of an equi-width/equi-depth binning aggregate (the
+    one data-sized pass happens BEFORE this operator). Returns (bin,
+    iso_ppm), the non-decreasing least-squares fit of pos/n in half-up
+    integer ppm.
+
+    Device: PAVA's pool-adjacent loop is sequential, but its solution has
+    the closed minimax form ``fit_i = max_{k<=i} min_{j>=i}
+    mean(pos[k..j] / n[k..j])`` over interval means — three bounded joins
+    and two aggs instead of a loop. Every interval mean snaps to integer
+    ppm FIRST (the half-up device), so the max/min lattice is pure integer
+    comparison and the fit replays hash-exact in the oracle. Monotonicity
+    of the minimax holds for ANY matrix (snapped included): growing i
+    shrinks the inner min's domain and grows the outer max's.
+
+    Scale: every relation here is at most |bins|^2 rows (~4k at 64 bins);
+    the non-equi joins are broadcast by construction, never data-sized.
+    """
+    kk = bins.select(F.col("bin").alias("k"))
+    jj = bins.select(F.col("bin").alias("j"))
+    spine = F.broadcast(kk).crossJoin(F.broadcast(jj)).where(
+        F.col("k") <= F.col("j")
+    )
+    members = spine.join(
+        F.broadcast(bins),
+        (F.col("bin") >= F.col("k")) & (F.col("bin") <= F.col("j")),
+    )
+    iv = members.groupBy("k", "j").agg(
+        F.sum("n").alias("n_kj"), F.sum("pos").alias("p_kj")
+    )
+    ivm = iv.select(
+        "k",
+        "j",
+        F.call_function(
+            "div",
+            2 * F.col("p_kj") * F.lit(mul).cast("long") + F.col("n_kj"),
+            2 * F.col("n_kj"),
+        ).alias("mean_ppm"),
+    )
+    inner = bins.select("bin").join(
+        F.broadcast(ivm),
+        (F.col("k") <= F.col("bin")) & (F.col("j") >= F.col("bin")),
+    )
+    return (
+        inner.groupBy("bin", "k")
+        .agg(F.min("mean_ppm").alias("minm"))
+        .groupBy("bin")
+        .agg(F.max("minm").cast("long").alias("iso_ppm"))
+    )
+
+
+def kth_smallest_binned(
+    vals: DataFrame,
+    k_col: str = "k",
+    val_col: str = "v",
+    tie_col: str = "tie",
+    n_bins: int = 1024,
+) -> DataFrame:
+    """EXACT k-th smallest of a value column by the classic two-pass
+    distributed selection (no global sort, no single-partition window
+    over the data): bin values into ``n_bins`` equi-width buckets, find
+    the bucket containing rank k from the BOUNDED bucket histogram, then
+    rank only inside that one bucket (~n/n_bins rows). Total order is
+    (value, tie) so the selected row is unique.
+
+    ``vals`` must carry (val_col >= 0 long, tie_col) plus a broadcastable
+    1-row rank spec is derived internally from ``k_col`` — callers pass
+    k as a column on every row (constant). Returns a 1-row DataFrame
+    (q = the k-th smallest value).
+
+    Scale: pass one is a map-side-combined n_bins-key histogram; the
+    cumulative runs on n_bins rows; pass two touches one bucket. This is
+    how exact distributed quantile selection is actually done — the
+    alternative (global orderBy + row_number) collapses to one
+    partition.
+    """
+    vmax = vals.agg(
+        F.max(val_col).cast("long").alias("vmax"),
+        F.max(k_col).cast("long").alias("ksel"),
+    )
+    binned = vals.drop(k_col).crossJoin(F.broadcast(vmax)).select(
+        val_col,
+        tie_col,
+        F.col("ksel").alias("k"),
+        F.least(
+            F.floor(F.col(val_col) * n_bins / (F.col("vmax") + 1)).cast(
+                "long"
+            ),
+            F.lit(n_bins - 1).cast("long"),
+        ).alias("bin"),
+    ).localCheckpoint()  # histogram pass + the in-bucket pass
+    hist = binned.groupBy("bin").agg(F.count(F.lit(1)).alias("c"))
+    cum = hist.select(
+        "bin",
+        "c",
+        F.sum("c")
+        .over(Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1))
+        .alias("before"),
+    ).fillna({"before": 0})
+    target = (
+        cum.crossJoin(F.broadcast(vmax.select(F.col("ksel").alias("k"))))
+        .where(
+            (F.col("before") < F.col("k"))
+            & (F.col("before") + F.col("c") >= F.col("k"))
+        )
+        .select("bin", (F.col("k") - F.col("before")).alias("offset"))
+    )
+    inb = binned.join(F.broadcast(target), "bin")
+    w = Window.partitionBy("bin").orderBy(val_col, tie_col)
+    return (
+        inb.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == F.col("offset"))
+        .select(F.col(val_col).alias("q"))
+    )

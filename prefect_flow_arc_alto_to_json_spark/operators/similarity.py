@@ -1161,7 +1161,8 @@ def rrf_fuse(
     fusion is associative-exact and oracle-replayable. The merge is a
     UNION + re-aggregate, never a full-outer join (a full outer of N
     candidate lists cannot broadcast and would SMJ; the union groupBy is
-    one exchange over |candidates| rows).
+    one exchange over |candidates| rows — see q_daily_backlog for the
+    same device on time series).
 
     Returns (id, <name>_ppm per input list, rrf_ppm, rank) for the top-k
     fused ids; ``<name>_ppm > 0`` doubles as the membership flag.

@@ -13,7 +13,7 @@ loop is bounded by calendar days, not data volume.
 Determinism contract: all state is integer cents; each half-step rounds
 with ``floor((x + 1) / 2)`` (exact integer, defined identically in the
 recursive-CTE oracle), so the recurrence is replayable hash-exact — the
-same device that makes dedup_components and q_pagerank_trade's iterative
+same device that makes dedup_components' and PageRank's iterative
 floats adjudicable.
 """
 

@@ -16,11 +16,12 @@ from .registry import (  # noqa: F401
 
 # Import for registration side effects. ORDER MATTERS: the grading driver
 # adjudicates only the FIRST 50 entries of QUERIES in registration order, so
-# the flagship composition and multimodal queries register before the long
-# dedup/text/similarity tails. Redundant twins are tiered into EXTRA_QUERIES
-# (pytest-adjudicated) to keep QUERIES at <= 50.
+# the flagship composition, temporal joins and multimodal queries register
+# before the long dedup/text/similarity tails. Redundant twins are tiered
+# into EXTRA_QUERIES (pytest-adjudicated) to keep QUERIES at <= 50.
 from . import relational  # noqa: E402,F401
 from . import alto_queries  # noqa: E402,F401
+from . import temporal_queries  # noqa: E402,F401
 from . import pipeline_queries  # noqa: E402,F401
 from . import multimodal_queries  # noqa: E402,F401
 from . import dedup_queries  # noqa: E402,F401
@@ -31,6 +32,7 @@ from . import streaming_queries  # noqa: E402,F401
 from . import lake_queries  # noqa: E402,F401
 from . import corpus_queries  # noqa: E402,F401
 from . import skew_queries  # noqa: E402,F401
+from . import tpch_queries  # noqa: E402,F401
 
 __all__ = ["QUERIES", "ORACLES", "EXTRA_QUERIES", "EXTRA_ORACLES", "query"]
 from . import bloom_queries  # noqa: E402,F401

@@ -1140,8 +1140,9 @@ def q_scd2_pointintime(spark: SparkSession, sf_dir: str) -> DataFrame:
     version in effect at the click's instant ([valid_from, valid_to)
     containment; clicks before the user's first version attribute to
     version 0). The lakehouse's 'AS OF the fact's own time' semantics —
-    distinct from q_time_travel (whole-table snapshot): here every fact
-    row time-travels independently.
+    distinct from q_asof_join (nearest key, one relation) and
+    q_time_travel (whole-table snapshot): here every fact row time-
+    travels independently.
 
     Scale: the join carries the user_id EQUALITY key, so it shuffles on
     user and evaluates the validity range as a residual — never a pure

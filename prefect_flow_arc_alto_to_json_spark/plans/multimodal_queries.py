@@ -59,7 +59,8 @@ def synth_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "mm_payload_stats",
     # rotated to the pytest tier in round 7: mm_features/mm_image_near_dup
-    # grade the real decode path; the byte-stats twin freed a graded slot
+    # grade the real decode path; the byte-stats twin freed a slot for
+    # the grouped-recurrence family (q_holt_linear_trend)
     extra=True,
     oracle=f"""
     SELECT doc_id AS asset_id,

@@ -543,8 +543,9 @@ def pipeline_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pref_oracle(rounds: int = 3) -> str:
     """Quality-judge preference pipeline replay: the shared quality CTEs,
     block ranking, adjacent pairing (LEAD), cross-lang contests, then
-    the snapped Bradley-Terry MM unroll that replays
-    operators/preference.bradley_terry_nano."""
+    the same snapped Bradley-Terry MM unroll as q_bradley_terry's
+    oracle (template kept textually identical — both replay
+    operators/preference.bradley_terry_nano)."""
     from .text_queries import _QUALITY_CTES
 
     head = _QUALITY_CTES + """,

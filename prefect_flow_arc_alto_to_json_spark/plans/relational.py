@@ -2198,7 +2198,7 @@ def q_mad_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     median via the interpolated percentile both engines share
     (q_percentiles precedent), deviations |x − m| exact doubles (m is at
     worst a .5 midpoint), second interpolated median over them. The
-    robust complement of a mean/σ z-score.
+    robust complement of q_rolling_zscore_anomaly's mean/σ window.
 
     Scale: two grouped percentile passes sharing the event_type key —
     the median relation is group-cardinality-sized and broadcasts into
@@ -2551,7 +2551,8 @@ def q_exact_median_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     — for odd n only rn = (n+1)/2 matches), then average them with the
     half-up integer device. The distributed shape is ONE group-key
     window (rank + count share the exchange) — the exact complement of
-    q_approx_percentile's sketch, at per-group grain.
+    q_approx_percentile's sketch and q_winsorize's global dense-ids
+    rank, at per-group grain.
 
     Scale: one exchange on the group key; the middle-row filter drops
     everything else before the 1-or-2-row-per-group aggregate."""
@@ -3165,8 +3166,9 @@ def q_frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_k_anon_generalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-anonymity GENERALIZATION ladder — the actual anonymizer MOVE
-    beyond a suppression census: quasi-identifier
+    """K-anonymity GENERALIZATION ladder — completes q_k_anonymity (the
+    suppression census over documents) with the actual anonymizer MOVE:
+    quasi-identifier
     groups (nation, segment) smaller than k=5 re-identify their members,
     so each group gets the anonymization DECISION the k-anonymizer would
     take: keep at nation level (anon_level 0), generalize the hierarchy

@@ -47,33 +47,7 @@ from ..streaming.pipeline import (
 )
 from .registry import query
 from .text_queries import _SQL_TOKS as _SQL_TOKS_Q
-
-# Last-touch attribution (30-minute lookback) as a windowed last_value
-# over each user's event sequence; stream_attribution must equal it.
-ATTRIBUTION_ORACLE = """
-    WITH seq AS (
-      SELECT event_id, user_id, ts, event_type,
-             last_value(CASE WHEN event_type <> 'purchase'
-                             THEN struct_pack(ts := ts, event_id := event_id,
-                                              event_type := event_type)
-                        END IGNORE NULLS) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-             ) AS touch
-      FROM events
-    )
-    SELECT event_id AS purchase_id,
-           user_id,
-           strftime(ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
-           CASE WHEN touch.ts >= ts - INTERVAL 30 MINUTE
-                THEN touch.event_id END AS touch_id,
-           CASE WHEN touch.ts >= ts - INTERVAL 30 MINUTE
-                THEN touch.event_type END AS touch_type,
-           CASE WHEN touch.ts >= ts - INTERVAL 30 MINUTE
-                THEN CAST(date_diff('second', touch.ts, ts) AS BIGINT)
-           END AS seconds_since_touch
-    FROM seq WHERE event_type = 'purchase'
-"""
+from .temporal_queries import ATTRIBUTION_ORACLE
 
 
 @query(
@@ -1150,7 +1124,7 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     most recent pre-cutoff non-purchase per user) was recovered — a
     fresh state would mis-attribute every early-phase-2 purchase whose
     touch happened before the cutoff. The oracle is the batch
-    carry-forward window (ATTRIBUTION_ORACLE):
+    carry-forward window (q_attribution_last_touch's exact SQL):
     streaming state walk ≡ batch window, hash-exact, including the
     NULL rows for out-of-lookback purchases.
     """

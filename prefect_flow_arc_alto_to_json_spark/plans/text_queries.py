@@ -485,13 +485,13 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jensen-Shannon divergence between two corpus halves' TOKEN
     distributions (sources src0-src9 vs src10-src19) — the
-    vocabulary-level drift/contamination gate. Per-token KL(p||m) terms
-    (m the mixture) are micro-unit snapped before the totals, the
-    unigram_logprob determinism device, so the ln() survives
-    cross-engine hashing; absent-token terms are exactly 0 by the 0·ln0
-    convention, encoded as an explicit CASE on both sides. Output: one
-    row per union-vocab token with both counts and both KL
-    contributions, plus the symmetric JS total.
+    vocabulary-level drift/contamination gate beside q_psi_drift's
+    feature-histogram one. Per-token KL(p||m) terms (m the mixture) are
+    micro-unit snapped before the totals, the unigram_logprob determinism
+    device, so the ln() survives cross-engine hashing; absent-token terms
+    are exactly 0 by the 0·ln0 convention, encoded as an explicit CASE on
+    both sides. Output: one row per union-vocab token with both counts
+    and both KL contributions, plus the symmetric JS total.
 
     Scale: two scans collapse to ONE (the group tag is a column, not a
     split); the shuffle carries (token, partial counts) — vocabulary-
@@ -1097,9 +1097,8 @@ def text_quality_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     textstats.quality_score against the lang='en' label — the eval loop
     closed end-to-end inside the engine (score derivation AND its
     Mann-Whitney evaluation both value-oracled; the oracle reuses the
-    factored _QUALITY_CTES verbatim, then runs the histogram rank-sum
-    of operators/quality.roc_auc_histogram on the resulting double
-    scores — exact
+    factored _QUALITY_CTES verbatim, then runs the same histogram
+    rank-sum as q_roc_auc on the resulting double scores — exact
     because both engines derive bit-identical quality doubles from the
     integer micro-unit form).
     """

